@@ -334,6 +334,20 @@ object AnalyticPipeline {
     // so each pool thread re-establishes it per task.
     val jobGroup = s"graft-chain-${java.util.UUID.randomUUID()}"
     @volatile var cancelled = false
+    // The flag-id cascade reads only the run's INPUT dir, so it is
+    // independent of every stage build. It is submitted FIRST: the pool
+    // is FIFO, so queued behind the stages it would start only once a
+    // stage finished and then run on alone after the last of them.
+    // localCheckpoint materializes the small id set off the pool thread;
+    // result identical, lineage just truncated. Awaited only on the
+    // non-aborted path, like the stage futures.
+    val flagsFut = update.map(u => Future {
+      if (cancelled) throw new InterruptedException(
+        s"chain aborted before update flags ${u.name} started")
+      s.sparkContext.setJobGroup(jobGroup,
+        s"chain update flags: ${u.name}", interruptOnCancel = true)
+      u.flags(s, dir).toDF("flag_id").distinct().localCheckpoint()
+    })
     val futs: Map[String, Future[StageRes]] = ord.map { st =>
       st.table -> Future {
         if (cancelled) throw new InterruptedException(
@@ -365,19 +379,6 @@ object AnalyticPipeline {
         StageRes(n, d, gate, finalN)
       }
     }.toMap
-    // The flag-id cascade reads only the run's INPUT dir, so it is
-    // independent of every stage build — speculated ALONGSIDE them (it
-    // must start before the fold, or it overlaps nothing).
-    // localCheckpoint materializes the small id set off the pool thread;
-    // result identical, lineage just truncated. Awaited only on the
-    // non-aborted path, like the stage futures.
-    val flagsFut = update.map(u => Future {
-      if (cancelled) throw new InterruptedException(
-        s"chain aborted before update flags ${u.name} started")
-      s.sparkContext.setJobGroup(jobGroup,
-        s"chain update flags: ${u.name}", interruptOnCancel = true)
-      u.flags(s, dir).toDF("flag_id").distinct().localCheckpoint()
-    })
     // First abort: stop consuming speculative results AND stop the
     // speculation itself — cancel the group's in-flight Spark jobs and
     // refuse to start queued ones (the `cancelled` gate above).

@@ -3352,10 +3352,10 @@ object BuildQueries {
 
   /** §7.5.12 mcaid elig_demo extra — the noncisgender flag (q159,
     * load_stage.mcaid_elig_demo_extra.R): dysphoria/endocrine dx sets,
-    * six procedure sets with claim-level cancer-exclusion anti-joins,
-    * name-LIKE hormone sets with parsed strength × dosage-form
-    * thresholds, and the union/intersect/conflict-removal cascade into
-    * a demographics flag. */
+    * six procedure sets with claim-level cancer exclusions, name-LIKE
+    * hormone sets with parsed strength × dosage-form thresholds, and
+    * the union/intersect/conflict-removal cascade into a demographics
+    * flag. */
   def q159EligDemoExtra(s: SparkSession, dir: String): DataFrame = {
     val pk = col("l_partkey")
     val sk = col("l_suppkey")

@@ -242,4 +242,44 @@ class PlanSpec extends SparkSpec {
     }
     assert(offenders.isEmpty, s"unintended cross joins: $offenders")
   }
+
+  test("q159 flag cascade plans a bounded number of joins and scans") {
+    // Each DataFrame val is inlined at every use, so a set-algebra
+    // cascade of semi/anti joins duplicates its input subtrees once per
+    // use. Over one parquet relation per input, the aggregation shape
+    // reads icdcm and demo twice, the others once, with three joins.
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("q159_plan")
+    def rel(name: String, df: org.apache.spark.sql.DataFrame) = {
+      val p = root.resolve(name).toString
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val icdcm = rel("icdcm", Seq((1L, 10L, "F640", 10))
+      .toDF("id_mcaid", "claim_header_id", "icdcm_norm", "icdcm_version"))
+    val proc = rel("proc", Seq((1L, 10L, "15757"))
+      .toDF("id_mcaid", "claim_header_id", "procedure_code"))
+    val pharm = rel("pharm", Seq((1L, "n1")).toDF("id_mcaid", "ndc"))
+    val demo = rel("demo", Seq((1L, "Female")).toDF("id_mcaid", "gender_me"))
+    val ndcRef = rel("ndcref", Seq(("n1", "ESTRADIOL", "TABLET", "1", "MG"))
+      .toDF("ndc", "nonproprietaryname", "dosageformname",
+        "active_numerator_strength", "active_ingred_unit"))
+    val optimized = graft.builds.EligDemoExtra
+      .build(icdcm, proc, pharm, demo, ndcRef).queryExecution.optimizedPlan
+    val joins = optimized.collect { case j: Join => j }.size
+    val scans = optimized.collectLeaves().collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.head.getName
+        case other => other.toString
+      }
+    }.groupBy(identity).view.mapValues(_.size).toMap
+    assert(joins <= 6, s"$joins joins:\n$optimized")
+    assert(scans.keySet === Set("icdcm", "proc", "pharm", "demo", "ndcref"),
+      s"inputs lost or unrecognised: $scans")
+    assert(scans.values.forall(_ <= 2), s"inputs re-scanned: $scans")
+  }
 }
