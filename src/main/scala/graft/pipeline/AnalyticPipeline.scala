@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,19 +30,21 @@ import graft.qa.Qa
   *    physical row order (alphabetical — NOT a valid execution order),
   *    so the sort is load-bearing, and the tie-break makes the
   *    resulting schedule a pure function of the declared rows.
-  *  - [[run]] executes each stage in topo order: build → write the
-  *    stage table → [[Qa.loadGate]] against the run's metadata log
+  *  - [[run]] builds each stage, writes the stage table and QAs the
+  *    WRITTEN table: [[Qa.loadGate]] against the run's metadata log
   *    (the metadata.qa_mcaid analog; a fresh run-scoped log, so the
   *    gate has first-load semantics and the verdict is deterministic)
-  *    → exact-duplicate check (the grain-distinctness QA every
-  *    qa_stage battery opens with) → on pass, promote stage → final as
-  *    a directory RENAME (the reference's sp_rename / alter_schema —
-  *    a metadata move, not a rewrite) and re-count the final table
+  *    plus the exact-duplicate check (the grain-distinctness QA every
+  *    qa_stage battery opens with). A sequential fold in topo order
+  *    then decides each stage: a failed stage is not promoted but the
+  *    chain continues (the master script messages and moves on) —
+  *    EXCEPT the hard gate: once a gated stage's gate fails, that
+  *    stage and everything after it abort (the `stop()`). After the
+  *    optional [[UpdateStep]], one promote phase renames stage → final
+  *    (the reference's sp_rename / alter_schema — a metadata move, not
+  *    a rewrite) and re-counts the final table
   *    (master_mcaid_analytic.R's rows_claim_stage == rows_claim_final
-  *    check). A failed stage does not promote but the chain continues
-  *    (the master script messages and moves on) — EXCEPT the hard
-  *    gate: once a gated stage's gate fails, that stage and everything
-  *    after it abort (the `stop()`).
+  *    check).
   *
   * Output: one verdict frame — (stage_seq, table_name, item, pass,
   * observed, expected). Inline-promote masters (q278) emit three rows
@@ -242,28 +246,45 @@ object AnalyticPipeline {
     StageDef("xwalk_apde_mcaid_mcare_pha", Nil,
       graft.queries.BuildQueries.q155ApdeXwalk))
 
-  /** Execute the chain. Returns the verdict frame (see object doc).
-    *
-    * Two promote disciplines, both in the reference:
-    *  - `promoteList` EMPTY (q278's master): each stage promotes
-    *    inline after its QA passes (alter_schema per section,
-    *    master_mcaid_mcare_analytic.R:232-237) — 3 verdict rows per
-    *    stage.
-    *  - `promoteList` NON-empty (q279's master): stages only load+QA
-    *    (2 rows each); then the optional [[UpdateStep]]; then the
-    *    STAGE→FINAL loop walks the fixed list
-    *    (master_mcaid_analytic.R:399-404) promoting every BUILT
-    *    stage UNCONDITIONALLY — the loop has no QA gate, only the
-    *    stage-vs-final row-count compare whose PASS/FAIL lands in
-    *    qa_mcaid (:455-470) — one promote_rows row per list entry.
-    *    A fired stop() kills the update and the whole loop: aborted
-    *    rows for every remaining step. */
-  /** One stage's speculative result: fused QA counts, the load gate's
-    * verdict, and (inline chains with no hard gate) the promote
-    * re-count. */
-  private case class StageRes(n: Long, d: Long, gate: Qa.QaCheck,
-      finalN: Option[Long])
+  /** Pool size for the chain's stage futures. */
+  private val chainThreads = 6
 
+  /** One stage's QA result: row count, distinct-row count and the load
+    * gate's verdict. */
+  private case class StageRes(n: Long, d: Long, gate: Qa.QaCheck)
+
+  /** Execute the chain and return the verdict frame (see object doc).
+    *
+    *  1. Stage futures, submitted in topo order to a bounded pool: each
+    *     builds its stage, writes the stage table and QAs it, nothing
+    *     more.
+    *  2. The decision fold, sequential in topo order: it awaits each
+    *     stage, records pass / fail and the load_gate and distinct_rows
+    *     rows, and fires the hard gate (the stage and everything after
+    *     it abort; in-flight speculation is cancelled).
+    *  3. The optional [[UpdateStep]] rewrites its table's stage dir.
+    *  4. One promote phase. Its targets follow the reference's two
+    *     promote disciplines:
+    *      - `promoteList` NON-empty (q279's master): the STAGE→FINAL
+    *        loop's fixed list (master_mcaid_analytic.R:399-404), every
+    *        entry UNCONDITIONALLY — the loop has no QA gate, only the
+    *        stage-vs-final row-count compare whose PASS/FAIL lands in
+    *        qa_mcaid (:455-470). One promote_rows row per entry follows
+    *        the update rows. A fired stop() kills the update and the
+    *        whole loop: aborted rows for every remaining step.
+    *      - `promoteList` EMPTY (q278's master, alter_schema per
+    *        section, master_mcaid_mcare_analytic.R:232-237): the stages
+    *        that passed and were not aborted, in topo order. Each
+    *        stage's promote_rows row joins its own rows (3 per stage);
+    *        a stage that did not promote observes 0.
+    *     Each target is renamed in order on the caller; the re-counts
+    *     (parquet footer reads) overlap on the pool.
+    *
+    * Every exit — a verdict, a rethrown build failure, an await
+    * timeout — goes through one `finally`: it cancels the job group
+    * unless the run completed without an abort, stops the pool
+    * and deletes the run's work dir. The verdict is a local relation,
+    * so nothing reads that dir after `run` returns. */
   def run(s: SparkSession, dir: String, stages: Seq[StageDef],
       hardGate: Map[String, Seq[String]] = Map.empty,
       update: Option[UpdateStep] = None,
@@ -271,230 +292,191 @@ object AnalyticPipeline {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.{Duration, SECONDS}
     // duplicate stage table names would silently collapse to ONE future
-    // in the speculative map below (both fold legs consuming the same
-    // result) — refuse them up front (VERDICT r14 #3c)
+    // in the speculative map below — refuse them up front
     require(stages.map(_.table).distinct.size == stages.size,
       s"duplicate stage table names: ${stages.map(_.table)
         .groupBy(identity).collect { case (t, g) if g.size > 1 => t }
         .mkString(", ")}")
-    val work = Files.createTempDirectory("graft_pipeline")
-    // run-scoped metadata.qa_mcaid analog (see Qa.LoadLog — replaces a
-    // per-stage parquet append + re-read pair, 26 serialized driver
-    // jobs per 13-stage chain, with an in-memory log; verdicts and
-    // first-load semantics identical)
-    val qaLog = new Qa.LoadLog
-    val failed = scala.collection.mutable.Set.empty[String]
-    val stageN = scala.collection.mutable.Map.empty[String, Long]
-    val deferred = promoteList.nonEmpty
-    var aborted = false
-    def stageDirOf(t: String) = work.resolve(s"stage_$t")
-    def finalDirOf(t: String) = work.resolve(s"final_$t")
-    // A table's CURRENT location: staged until promoted, final after —
-    // an inline-promote chain with an UpdateStep moves the stage dir
-    // before the update runs, so the update must follow it (r14 #3d).
-    def liveDirOf(t: String) =
-      if (Files.exists(stageDirOf(t))) stageDirOf(t) else finalDirOf(t)
-    val ord = topoOrder(stages)
     // Finite await for every speculative result: one wedged Spark job
-    // must fail the query, not hang the bench forever (r14 #3a). Long
-    // default — real chain stages at scale run hours, and the timeout
-    // exists to convert "forever" into a diagnosable error.
+    // must fail the query, not hang the caller forever. Long default —
+    // real chain stages at scale run hours, and the timeout exists to
+    // convert "forever" into a diagnosable error.
     val awaitSec = s.conf.getOption("spark.graft.chainAwaitTimeoutSec")
       .map(_.toLong).getOrElse(21600L)
     val awaitD = Duration(awaitSec, SECONDS)
-
-    // ---- Speculative phase (opt guide §2.6: overlap independent jobs).
-    // The chain's stages are independent Spark jobs — the reference runs
-    // them back-to-back only because its master script is sequential R.
-    // Submitting them from a bounded pool lets the next stage's tasks
-    // back-fill executors idled by the current stage's write tail; FIFO
-    // scheduling gives exactly that. Verdict semantics are preserved by
-    // keeping the DECISION fold below strictly sequential in topo order:
-    //  - a stage that the fold aborts simply never has its speculative
-    //    result consumed (its build may have run — output-invisible: the
-    //    work dir is run-scoped and the qa log is per-table);
-    //  - a speculative build failure is rethrown AT THE FOLD, and only
-    //    if the stage is not aborted — exactly when and what the
-    //    sequential runner would have thrown;
-    //  - the qa-log gate is atomic (Qa.LoadLog synchronizes internally);
-    //  - inline promote (Files.move + re-count) stays in the fold when a
-    //    hard gate exists (an abort must leave the stage unpromoted);
-    //    with no hard gate the pass decision is stage-local, so the
-    //    promote rides inside the speculative task.
-    val par = math.max(1, s.conf.getOption("spark.graft.chainParallelism")
-      .map(_.toInt).getOrElse(6))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutor(pool)
-    val canAbort = hardGate.nonEmpty
-    // Every speculative Spark job runs under one cancellable job group:
-    // when the fold aborts, the dead stages' in-flight builds are
-    // CANCELLED, not left to burn cluster time past run()'s return
-    // (r14 #3b). The group id is run-scoped; setJobGroup is thread-local
-    // so each pool thread re-establishes it per task.
+    val ord = topoOrder(stages)
+    val deferred = promoteList.nonEmpty
+    val threadN = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      chainThreads, (r: Runnable) => {
+        val t = new Thread(r, s"graft-chain-${threadN.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // Every Spark job of the run carries one cancellable, run-scoped
+    // job group; setJobGroup is thread-local, so each task sets it.
     val jobGroup = s"graft-chain-${java.util.UUID.randomUUID()}"
-    @volatile var cancelled = false
-    // The flag-id cascade reads only the run's INPUT dir, so it is
-    // independent of every stage build. It is submitted FIRST: the pool
-    // is FIFO, so queued behind the stages it would start only once a
-    // stage finished and then run on alone after the last of them.
-    // localCheckpoint materializes the small id set off the pool thread;
-    // result identical, lineage just truncated. Awaited only on the
-    // non-aborted path, like the stage futures.
-    val flagsFut = update.map(u => Future {
-      if (cancelled) throw new InterruptedException(
-        s"chain aborted before update flags ${u.name} started")
-      s.sparkContext.setJobGroup(jobGroup,
-        s"chain update flags: ${u.name}", interruptOnCancel = true)
-      u.flags(s, dir).toDF("flag_id").distinct().localCheckpoint()
-    })
-    val futs: Map[String, Future[StageRes]] = ord.map { st =>
-      st.table -> Future {
-        if (cancelled) throw new InterruptedException(
-          s"chain aborted before stage ${st.table} started")
-        s.sparkContext.setJobGroup(jobGroup,
-          s"chain stage: ${st.table}", interruptOnCancel = true)
-        // stage load: write the stage table, QA the WRITTEN table (the
-        // reference QAs stage.<table> in the database, not the query).
-        // The row count and the exact-duplicate check FUSE into one
-        // aggregation (one scan, one partial-agg shuffle) — a separate
-        // loadGate count plus a distinct().count() job would triple
-        // the per-stage QA scans (the Qa.fusedTableChecks rule).
-        val stageDir = stageDirOf(st.table)
-        st.build(s, dir).write.parquet(stageDir.toString)
-        val staged = s.read.parquet(stageDir.toString)
-        val allCols = struct(staged.columns.map(col).toIndexedSeq: _*)
-        val qaRow = staged.agg(count(lit(1)).as("n"),
-          count_distinct(allCols).as("d")).head()
-        val n = qaRow.getLong(0)
-        val d = qaRow.getLong(1)
-        val gate = qaLog.gate(n, st.table)
-        val pass = gate.pass && d == n && n > 0
-        val finalN = if (!deferred && !canAbort && pass) {
-          // promote: the sp_rename / alter_schema metadata move
-          val finalDir = finalDirOf(st.table)
-          Files.move(stageDir, finalDir)
-          Some(s.read.parquet(finalDir.toString).count())
-        } else None
-        StageRes(n, d, gate, finalN)
-      }
-    }.toMap
-    // First abort: stop consuming speculative results AND stop the
-    // speculation itself — cancel the group's in-flight Spark jobs and
-    // refuse to start queued ones (the `cancelled` gate above).
-    def cancelSpeculation(): Unit = if (!cancelled) {
-      cancelled = true
-      try s.sparkContext.cancelJobGroup(jobGroup)
-      catch { case _: Throwable => () }
-    }
+    @volatile var aborted = false
+    var completed = false
+    val work = Files.createTempDirectory("graft_pipeline")
+    try {
+      // run-scoped metadata.qa_mcaid analog (see Qa.LoadLog — an
+      // in-memory log; Qa.LoadLog synchronizes internally)
+      val qaLog = new Qa.LoadLog
+      val failed = scala.collection.mutable.Set.empty[String]
+      val stageN = scala.collection.mutable.Map.empty[String, Long]
+      def stageDirOf(t: String) = work.resolve(s"stage_$t")
+      def finalDirOf(t: String) = work.resolve(s"final_$t")
 
-    // ---- Decision fold: sequential, topo order — semantics unchanged.
-    val rows = ord.zipWithIndex.flatMap { case (st, i) =>
-      val seq = i + 1
-      val gateBroken = hardGate.getOrElse(st.table, Nil).exists(failed)
-      if (aborted || gateBroken) {
-        // the reference stop(): this stage and everything after it die
-        aborted = true
-        cancelSpeculation()
-        failed += st.table
-        Seq((seq, st.table, "aborted", 0, 0L, 0L))
-      } else {
-        val res = Await.result(futs(st.table), awaitD)
-        val (n, d, gate) = (res.n, res.d, res.gate)
-        stageN(st.table) = n
-        val pass = gate.pass && d == n && n > 0
-        if (!pass) failed += st.table
-        val base = Seq(
-          (seq, st.table, "load_gate", if (gate.pass) 1 else 0, n,
-            gate.expected),
-          (seq, st.table, "distinct_rows", if (d == n) 1 else 0, d, n))
-        if (deferred) base
+      // ---- Speculative phase (opt guide §2.6: overlap independent jobs).
+      // The chain's stages are independent Spark jobs — the reference
+      // runs them back-to-back only because its master script is
+      // sequential R. Submitting them from a bounded pool lets the next
+      // stage's tasks back-fill executors idled by the current stage's
+      // write tail. The futures only build, write and QA, so a stage
+      // the fold aborts merely has its result ignored (the work dir is
+      // run-scoped, the qa log per-table), and a build failure is
+      // rethrown at the fold only if the stage is not aborted — exactly
+      // when and what a sequential runner would throw.
+      //
+      // The flag-id cascade reads only the run's INPUT dir, so it is
+      // independent of every stage build. It is submitted FIRST: the
+      // pool is FIFO, so queued behind the stages it would start only
+      // once a stage finished and then run on alone after the last of
+      // them. localCheckpoint materializes the small id set off the
+      // caller; result identical, lineage just truncated.
+      val flagsFut = update.map(u => Future {
+        if (aborted) throw new InterruptedException(
+          s"chain aborted before update flags ${u.name} started")
+        s.sparkContext.setJobGroup(jobGroup,
+          s"chain update flags: ${u.name}", interruptOnCancel = true)
+        u.flags(s, dir).toDF("flag_id").distinct().localCheckpoint()
+      })
+      val futs: Map[String, Future[StageRes]] = ord.map { st =>
+        st.table -> Future {
+          if (aborted) throw new InterruptedException(
+            s"chain aborted before stage ${st.table} started")
+          s.sparkContext.setJobGroup(jobGroup,
+            s"chain stage: ${st.table}", interruptOnCancel = true)
+          // stage load: write the stage table, QA the WRITTEN table (the
+          // reference QAs stage.<table> in the database, not the query).
+          // The row count and the exact-duplicate check FUSE into one
+          // aggregation (one scan, one partial-agg shuffle) — a separate
+          // loadGate count plus a distinct().count() job would triple
+          // the per-stage QA scans (the Qa.fusedTableChecks rule).
+          val stageDir = stageDirOf(st.table).toString
+          st.build(s, dir).write.parquet(stageDir)
+          val staged = s.read.parquet(stageDir)
+          val allCols = struct(staged.columns.map(col).toIndexedSeq: _*)
+          val qaRow = staged.agg(count(lit(1)).as("n"),
+            count_distinct(allCols).as("d")).head()
+          val n = qaRow.getLong(0)
+          StageRes(n, qaRow.getLong(1), qaLog.gate(n, st.table))
+        }
+      }.toMap
+
+      // ---- Decision fold: sequential, topo order. Per stage: its seq
+      // and, unless aborted, its load_gate and distinct_rows rows.
+      val decided = ord.zipWithIndex.map { case (st, i) =>
+        val seq = i + 1
+        val gateBroken = hardGate.getOrElse(st.table, Nil).exists(failed)
+        if (aborted || gateBroken) {
+          // the reference stop(): this stage and everything after it
+          // die, and the speculation still in flight is cancelled
+          if (!aborted) s.sparkContext.cancelJobGroup(jobGroup)
+          aborted = true
+          failed += st.table
+          (st.table, seq, None)
+        } else {
+          val StageRes(n, d, gate) = Await.result(futs(st.table), awaitD)
+          stageN(st.table) = n
+          if (!(gate.pass && d == n && n > 0)) failed += st.table
+          (st.table, seq, Some(Seq(
+            (seq, st.table, "load_gate", if (gate.pass) 1 else 0, n,
+              gate.expected),
+            (seq, st.table, "distinct_rows", if (d == n) 1 else 0, d, n))))
+        }
+      }
+      val nStages = stages.length
+      val updRows = update.toSeq.flatMap { u =>
+        val seq = nStages + 1
+        if (aborted) Seq((seq, u.name, "aborted", 0, 0L, 0L))
         else {
-          val finalN = res.finalN.getOrElse {
-            if (pass) {
-              // hard-gated inline chain: promote only at decision time
-              val finalDir = finalDirOf(st.table)
-              Files.move(stageDirOf(st.table), finalDir)
-              s.read.parquet(finalDir.toString).count()
-            } else 0L
-          }
-          base :+ ((seq, st.table, "promote_rows",
-            if (pass && finalN == n) 1 else 0, finalN, n))
+          val before = stageN(u.table)
+          val updDir = stageDirOf(u.table)
+          val demo = s.read.parquet(updDir.toString)
+          val flagIds = broadcast(Await.result(flagsFut.get, awaitD))
+          val updated = demo
+            .join(flagIds, demo(u.key) === col("flag_id"), "left")
+            .withColumn(u.flagColumn,
+              when(col("flag_id").isNotNull, lit(1))
+                .otherwise(lit(null).cast("int")))
+            .drop("flag_id")
+          val newDir = work.resolve(s"upd_${u.table}")
+          updated.write.parquet(newDir.toString)
+          // swap the rewritten table in (the reference UPDATEs in place)
+          Files.move(updDir, work.resolve(s"pre_upd_${u.table}"))
+          Files.move(newDir, updDir)
+          val m = s.read.parquet(updDir.toString).agg(count(lit(1)).as("n"),
+            count(when(col(u.flagColumn) === 1, 1)).as("f")).head()
+          val (after, flagged) = (m.getLong(0), m.getLong(1))
+          stageN(u.table) = after
+          Seq(
+            (seq, u.name, "update_rows", if (after == before) 1 else 0,
+              after, before),
+            (seq, u.name, "update_flagged", 1, flagged, after))
         }
       }
-    }
-    val nStages = stages.length
-    val updRows = update.toSeq.flatMap { u =>
-      val seq = nStages + 1
-      if (aborted) Seq((seq, u.name, "aborted", 0, 0L, 0L))
-      else {
-        val before = stageN(u.table)
-        // liveDirOf: in an inline-promote chain the table was already
-        // renamed to final_<t>, and the reference UPDATEs the table
-        // wherever it currently lives (r14 #3d)
-        val updDir = liveDirOf(u.table)
-        val demo = s.read.parquet(updDir.toString)
-        val flagIds = broadcast(
-          Await.result(flagsFut.get, awaitD))
-        val updated = demo
-          .join(flagIds, demo(u.key) === col("flag_id"), "left")
-          .withColumn(u.flagColumn,
-            when(col("flag_id").isNotNull, lit(1))
-              .otherwise(lit(null).cast("int")))
-          .drop("flag_id")
-        val newDir = work.resolve(s"upd_${u.table}")
-        updated.write.parquet(newDir.toString)
-        // swap the rewritten table in (the reference UPDATEs in place)
-        val old = work.resolve(s"pre_upd_${u.table}")
-        Files.move(updDir, old)
-        Files.move(newDir, updDir)
-        val rewritten = s.read.parquet(updDir.toString)
-        val m = rewritten.agg(count(lit(1)).as("n"),
-          count(when(col(u.flagColumn) === 1, 1)).as("f")).head()
-        val (after, flagged) = (m.getLong(0), m.getLong(1))
-        stageN(u.table) = after
-        Seq(
-          (seq, u.name, "update_rows", if (after == before) 1 else 0,
-            after, before),
-          (seq, u.name, "update_flagged", 1, flagged, after))
-      }
-    }
-    // Promote loop: the renames are sequential metadata moves in the
-    // reference's fixed list order; the re-counts (parquet footer
-    // reads) are independent of each other, so they overlap on the
-    // pool. Emission order (and the seq numbers) stay the list's.
-    val promoRows =
-      if (aborted) promoteList.zipWithIndex.map { case (t, i) =>
-        val seq = nStages + (if (update.isDefined) 1 else 0) + 1 + i
-        (seq, t, "aborted", 0, 0L, 0L)
-      } else {
-        val counted = promoteList.map { t =>
-          val finalDir = finalDirOf(t)
-          Files.move(stageDirOf(t), finalDir)
-          t -> Future {
-            s.sparkContext.setJobGroup(jobGroup,
-              s"chain promote: $t", interruptOnCancel = true)
-            s.read.parquet(finalDir.toString).count()
-          }
+
+      // ---- Promote phase: the renames are sequential metadata moves in
+      // target order; the re-counts are independent, so they overlap.
+      val targets =
+        if (!deferred) decided.collect {
+          case (t, _, Some(_)) if !failed(t) => t }
+        else if (aborted) Nil
+        else promoteList
+      val promoted: Map[String, Long] = targets.map { t =>
+        // the sp_rename / alter_schema metadata move
+        val finalDir = Files.move(stageDirOf(t), finalDirOf(t)).toString
+        t -> Future {
+          s.sparkContext.setJobGroup(jobGroup,
+            s"chain promote: $t", interruptOnCancel = true)
+          s.read.parquet(finalDir).count()
         }
-        counted.zipWithIndex.map { case ((t, fut), i) =>
-          val seq = nStages + (if (update.isDefined) 1 else 0) + 1 + i
-          val n = stageN(t)
-          val finalN = Await.result(fut, awaitD)
-          (seq, t, "promote_rows", if (finalN == n) 1 else 0, finalN, n)
-        }
+      }.map { case (t, fut) => t -> Await.result(fut, awaitD) }.toMap
+      def promoteRow(seq: Int, t: String) = {
+        val finalN = promoted.getOrElse(t, 0L)
+        (seq, t, "promote_rows",
+          if (promoted.contains(t) && finalN == stageN(t)) 1 else 0,
+          finalN, stageN(t))
       }
-    // Drain the pool BEFORE returning: on the abort path the dead
-    // stages' speculative builds were cancelled above — interrupt any
-    // straggler thread and wait (bounded) so no cancelled Spark job
-    // bleeds into whatever the caller times next (r14 #3b).
-    pool.shutdown()
-    if (cancelled) {
+
+      val stageRows = decided.flatMap {
+        case (t, seq, None) => Seq((seq, t, "aborted", 0, 0L, 0L))
+        case (_, _, Some(base)) if deferred => base
+        case (t, seq, Some(base)) => base :+ promoteRow(seq, t)
+      }
+      val listSeq = nStages + update.size
+      val promoRows = promoteList.zipWithIndex.map { case (t, i) =>
+        if (aborted) (listSeq + 1 + i, t, "aborted", 0, 0L, 0L)
+        else promoteRow(listSeq + 1 + i, t)
+      }
+      import s.implicits._
+      val verdict = (stageRows ++ updRows ++ promoRows).toDF("stage_seq",
+        "table_name", "item", "pass", "observed", "expected")
+      completed = true
+      verdict
+    } finally {
+      // A run that completed without an abort has no job in flight.
+      // Otherwise cancel the group, including any job a straggler
+      // submits after this point, so none outlives run().
+      if (!completed || aborted)
+        try s.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
+        catch { case NonFatal(_) => () }
       pool.shutdownNow()
       pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+      graft.queries.LifecycleQueries.deleteRecursively(work.toFile)
     }
-    import s.implicits._
-    (rows ++ updRows ++ promoRows).toDF("stage_seq", "table_name",
-      "item", "pass", "observed", "expected")
   }
 }

@@ -56,7 +56,9 @@ object LifecycleQueries {
     root.getPath
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Recursive delete that never throws: a leftover scratch file must
+    * not mask the caller's own outcome. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()
   }

@@ -5,6 +5,11 @@ import graft.pipeline.AnalyticPipeline._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 /** Analytic-pipeline runner: deterministic topological order, the
   * load/distinctness gates, the rename-promote, and the
   * master_mcaid_analytic.R:355-358 hard-gate stop() semantics. */
@@ -17,6 +22,45 @@ class PipelineSpec extends SparkSpec {
   private def dup: (SparkSession, String) => DataFrame =
     (s, _) => { import s.implicits._
       Seq(1L, 1L, 2L).toDF("id") }
+
+  /** The runner's work dirs currently under java.io.tmpdir. */
+  private def runDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft_pipeline")).toSet
+
+  /** Polls `cond` for up to `secs` seconds. */
+  private def eventually(secs: Double)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + (secs * 1e9).toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(50L)
+    cond
+  }
+
+  /** Nothing of a finished run is left: no pool thread, no Spark job
+    * (cancelled jobs get a few seconds to wind down), no work dir. */
+  private def assertNothingLeft(dirsBefore: Set[String]): Unit = {
+    def chainThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-chain-") && t.isAlive)
+    assert(eventually(5)(chainThreads.isEmpty),
+      s"pool threads outlived run(): ${chainThreads.map(_.getName)}")
+    val tracker = spark.sparkContext.statusTracker
+    assert(eventually(10)(tracker.getActiveJobIds.isEmpty),
+      s"Spark jobs outlived run(): ${tracker.getActiveJobIds.toSeq}")
+    assert(runDirs() -- dirsBefore == Set.empty,
+      "the run's work dir outlived run()")
+  }
+
+  /** One row whose Spark TASK (not the driver) sleeps until interrupted
+    * or 60 s pass; [[PipelineSpec.napping]] counts such tasks running. */
+  private def sleepyTask: (SparkSession, String) => DataFrame = (s, _) => {
+    val nap = udf { (x: Long) =>
+      PipelineSpec.napping.incrementAndGet()
+      try Thread.sleep(60000L)
+      finally PipelineSpec.napping.decrementAndGet()
+      x
+    }.asNondeterministic()
+    s.range(0, 1, 1, 1).select(nap(col("id")).as("id"))
+  }
 
   test("topoOrder: parents always precede children; ready ties break " +
       "by DECLARED order (scrambled declarations sort correctly)") {
@@ -133,12 +177,15 @@ class PipelineSpec extends SparkSpec {
     val stages = Seq(
       StageDef("t1", Nil, mk(7)),
       StageDef("t2", Seq("t1"), mk(3)))
+    val dirsBefore = runDirs()
     val out = AnalyticPipeline.run(spark, "", stages).collect()
     assert(out.length == 6)
     assert(out.forall(_.getAs[Int]("pass") == 1))
     val promo = out.filter(_.getAs[String]("item") == "promote_rows")
     assert(promo.map(r => (r.getAs[String]("table_name"),
       r.getAs[Long]("observed"))).toSet == Set(("t1", 7L), ("t2", 3L)))
+    assert(runDirs() -- dirsBefore == Set.empty,
+      "the run's work dir outlived run()")
   }
 
   test("a failing NON-gated stage does not promote but the chain " +
@@ -219,6 +266,8 @@ class PipelineSpec extends SparkSpec {
       "stage is already renamed to final when the update runs, and the " +
       "update follows it there (update_rows keeps cardinality, flag " +
       "lands on the matching key)") {
+    // the update rewrites the stage table, then the promote phase renames
+    // it to final: the final table is the same either way round
     val stages = Seq(
       StageDef("demo", Nil, (s, _) => { import s.implicits._
         Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("user_id", "x") }),
@@ -245,4 +294,64 @@ class PipelineSpec extends SparkSpec {
     assert(promo.getAs[Int]("pass") == 0 &&
       promo.getAs[Long]("observed") == 0L)
   }
+
+  test("a stage build that throws: the exception reaches the caller and " +
+      "the run leaves no pool thread, Spark job or work dir behind") {
+    val stages = Seq(
+      StageDef("ok", Nil, mk(3)),
+      StageDef("boom", Seq("ok"),
+        (_, _) => throw new IllegalStateException("build boom")))
+    val dirsBefore = runDirs()
+    val e = intercept[IllegalStateException](
+      AnalyticPipeline.run(spark, "", stages))
+    assert(e.getMessage == "build boom")
+    assertNothingLeft(dirsBefore)
+  }
+
+  test("an await timeout: TimeoutException within a bounded time, and " +
+      "the stage's still-running Spark task is cancelled, not leaked") {
+    val stages = Seq(StageDef("slow", Nil, sleepyTask))
+    val dirsBefore = runDirs()
+    spark.conf.set("spark.graft.chainAwaitTimeoutSec", "2")
+    val t0 = System.nanoTime()
+    try intercept[TimeoutException](AnalyticPipeline.run(spark, "", stages))
+    finally spark.conf.unset("spark.graft.chainAwaitTimeoutSec")
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30.0, s"timeout surfaced after $secs s")
+    assertNothingLeft(dirsBefore)
+    assert(eventually(5)(PipelineSpec.napping.get == 0),
+      "the slow stage's task outlived run()")
+  }
+
+  test("abort while a dead stage's Spark task is running: run() returns " +
+      "the aborted verdict and leaves no pool thread, Spark job or work " +
+      "dir behind") {
+    // the gate parent fails only once the dead stage's task is running
+    val claims: (SparkSession, String) => DataFrame = (s, d) => {
+      assert(eventually(30)(PipelineSpec.napping.get > 0),
+        "the dead stage's task never started")
+      dup(s, d)
+    }
+    val stages = Seq(
+      StageDef("claims", Nil, claims),            // fails QA -> gate fires
+      StageDef("header", Seq("claims"), mk(5)),   // hard-gated: aborts
+      StageDef("down", Seq("header"), sleepyTask))
+    val dirsBefore = runDirs()
+    val t0 = System.nanoTime()
+    val out = AnalyticPipeline.run(spark, "", stages,
+      hardGate = Map("header" -> Seq("claims"))).collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30.0, s"run() took $secs s — the running task not cancelled")
+    val abortedTables = out.filter(_.getAs[String]("item") == "aborted")
+      .map(_.getAs[String]("table_name")).toSet
+    assert(abortedTables == Set("header", "down"))
+    assertNothingLeft(dirsBefore)
+    assert(eventually(5)(PipelineSpec.napping.get == 0),
+      "the dead stage's task outlived run()")
+  }
+}
+
+object PipelineSpec {
+  /** Sleeping Spark tasks currently running (see `sleepyTask`). */
+  val napping = new AtomicInteger(0)
 }
