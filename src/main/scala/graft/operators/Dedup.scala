@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SimHash64
+import graft.functions.{Bloom, SimHash64}
 import graft.functions.VectorFns
 
 /** Document deduplication at training-data scale: exact, MinHash+LSH,
@@ -342,26 +342,19 @@ object Dedup {
     }
   }
 
-  /** Distinct word n-grams as STRINGS (space-joined) — the gram unit for
-    * engine-portable hashing (the hashed [[shingles]] are faster for
-    * in-engine verification, but a cross-engine filter needs md5 over a
-    * canonical string form). Short docs yield one gram: the whole text. */
-  def wordGrams(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-      i => concat_ws(" ", slice(toks, i, lit(n)))))
-  }
-
-  private def bloomH1(item: Column): Column =
-    conv(substring(md5(item), 1, 8), 16, 10).cast("long")
-  private def bloomH2(item: Column): Column =
-    conv(substring(md5(item), 9, 8), 16, 10).cast("long")
+  /** Distinct word n-grams as STRINGS (space-joined), in first-occurrence
+    * order — the gram unit for engine-portable hashing (the hashed
+    * [[shingles]] are faster for in-engine verification, but a
+    * cross-engine filter needs md5 over a canonical string form). Short
+    * docs yield one gram: the whole text (codegen'd single pass; see
+    * [[graft.functions.WordGrams]]). */
+  def wordGrams(text: Column, n: Int): Column =
+    graft.functions.WordGrams.wordGrams(tokens(text), n)
 
   /** Build an `mBits`-bit Bloom filter over `itemCol` (k hash functions
-    * by Kirsch-Mitzenmacher double hashing: pos_i = (h1 + i*h2) mod m,
-    * h1/h2 = first/second 32 bits of md5 — the catalog's engine-portable
-    * hash). Returned as packed 64-bit words.
+    * by Kirsch-Mitzenmacher double hashing over md5 halves, the
+    * catalog's engine-portable hash; see [[graft.functions.Bloom]]).
+    * Returned as packed 64-bit words.
     *
     * The build is distributed (position explode -> distinct -> per-word
     * bit_or); only the finished m/64-word bitmap is collected — for the
@@ -369,13 +362,8 @@ object Dedup {
     * artifact like the IVF centroid literal, not a data collect. */
   def bloomBits(items: DataFrame, itemCol: Column, mBits: Int,
       k: Int): Array[Long] = {
-    require(mBits > 0 && mBits % 64 == 0, s"mBits must be a multiple of 64")
     val pos = items
-      .select(bloomH1(itemCol).as("_h1"), bloomH2(itemCol).as("_h2"))
-      .select(explode(sequence(lit(0), lit(k - 1))).as("_i"),
-        col("_h1"), col("_h2"))
-      .select(pmod(col("_h1") + col("_i") * col("_h2"),
-        lit(mBits.toLong)).as("_pos"))
+      .select(explode(Bloom.bloomPositions(itemCol, mBits, k)).as("_pos"))
       .distinct()
     val words = pos
       .select((col("_pos") / 64).cast("int").as("_w"),
@@ -391,29 +379,23 @@ object Dedup {
   /** Membership probe against a built filter: true iff ALL k positions
     * are set (Bloom semantics — false is definite absence, true is
     * maybe-present with the filter's deterministic false-positive set).
-    * Pure column expression over a 1-literal bitmap: the probe runs
-    * inside the scan stage with NO join and NO shuffle. */
+    * A codegen'd row expression holding the bitmap: it runs inside the
+    * scan stage with no join and no shuffle. */
   def bloomContains(bits: Array[Long], itemCol: Column, mBits: Int,
-      k: Int): Column = {
-    val bm = lit(bits)
-    val h1 = bloomH1(itemCol)
-    val h2 = bloomH2(itemCol)
-    (0 until k).map { i =>
-      val pos = pmod(h1 + lit(i.toLong) * h2, lit(mBits.toLong))
-      val word = element_at(bm, (pos / 64).cast("int") + 1)
-      call_function("shiftrightunsigned", word,
-        pmod(pos, lit(64)).cast("int")).bitwiseAND(lit(1L)) === 1L
-    }.reduce(_ && _)
-  }
+      k: Int): Column =
+    Bloom.bloomContains(bits, itemCol, mBits, k)
 
   /** Bloom-filter decontamination pre-filter — the broadcastable fast
     * path in FRONT of [[contamination]]'s exact join: benchmark grams
-    * build a compact bitmap (32 KB at the default sizing), every corpus
-    * doc probes its own grams against the literal — zero shuffle, zero
-    * join, whole-stage codegen — and only flagged docs need the exact
-    * containment pass. False positives are the filter's documented
-    * deterministic set (bounded by the load factor); false negatives are
-    * impossible, so the pre-filter never costs recall.
+    * build a compact bitmap (32 KB at the default sizing), and every
+    * corpus doc probes its own grams against it in one codegen'd row
+    * expression ([[graft.functions.BloomProbe]]: no join and no per-gram
+    * row). One doc-grain aggregation follows the probe, so a doc_id that
+    * appears in several rows sums their counts; docs with null text are
+    * dropped. Only flagged docs need the exact containment pass. False
+    * positives are the filter's documented deterministic set (bounded by
+    * the load factor); false negatives are impossible, so the pre-filter
+    * never costs recall.
     *
     * Output per corpus doc: distinct gram count, maybe-present gram
     * count, and the contaminated flag (maybe-hit ratio >= `threshold` —
@@ -429,13 +411,13 @@ object Dedup {
         .distinct(),
       col("_g"), mBits, k)
     corpus
+      .filter(col(ctext).isNotNull)
       .select(col(cid).as("doc_id"),
-        explode(wordGrams(col(ctext), shingleN)).as("_g"))
-      .withColumn("_maybe",
-        bloomContains(bits, col("_g"), mBits, k))
+        Bloom.bloomProbe(bits, tokens(col(ctext)), shingleN, mBits, k)
+          .as("_p"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("_maybe"), 1L).otherwise(0L)).as("n_maybe"))
+      .agg(sum(col("_p.n_grams")).as("n_grams"),
+        sum(col("_p.n_maybe")).as("n_maybe"))
       .withColumn("contaminated",
         col("n_maybe").cast("double") /
           greatest(col("n_grams"), lit(1L)).cast("double") >= threshold)

@@ -205,6 +205,10 @@ object Similarity {
     * rounding-robust); edge scores use the quantized grid so ranks
     * reproduce bit-identically in the oracle.
     *
+    * Precondition: `id` is unique per row. The per-node rank is keyed by
+    * (cell, salt, src), so a duplicated id whose rows land in different
+    * cells or salts is ranked once per group and can emit up to 2k edges.
+    *
     * @return (src, dst, qcosine, rank, mutual) — directed edges */
   def knnGraph(corpus: DataFrame, id: String, vec: String,
       centroids: Array[(Int, Seq[Float])], k: Int,

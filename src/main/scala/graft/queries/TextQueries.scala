@@ -135,8 +135,9 @@ object TextQueries {
   }
 
   /** Bloom-filter decontamination pre-filter (q207): the benchmark set's
-    * grams packed into a 32 KB bitmap literal, every corpus doc probed
-    * with no join and no shuffle — the stage to run in FRONT of q78's
+    * grams packed into a 32 KB bitmap, every corpus doc probed in one
+    * codegen'd row expression with no join, then one doc-grain
+    * aggregation — the stage to run in FRONT of q78's
     * exact containment at 100 TB (false negatives impossible, false
     * positives the filter's deterministic set, re-checked exactly by the
     * downstream join only for flagged docs). Same benchmark framing as
@@ -159,7 +160,7 @@ object TextQueries {
     * upper-bounds its true shared count, so pruning maybe-count < bound
     * can never lose a qualifying doc. At 100 TB the pre-filter removes
     * the inverted-index join for every unflagged doc at the cost of a
-    * scan-stage column expression. */
+    * scan-stage row expression and one doc-grain aggregation. */
   def q210DecontamPipeline(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val bench = docs.filter(col("doc_id") % 29 === 0)

@@ -17,8 +17,10 @@ class EmptyInputSpec extends SparkSpec {
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val root = Files.createTempDirectory("graft_empty_sf").toFile
+
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty_sf").toString
+    val dir = root.toString
     // preserve exact physical types (incl. events' TIMESTAMP(NANOS)) by
     // rewriting zero rows of the real files rather than hand-declaring
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -28,6 +30,10 @@ class EmptyInputSpec extends SparkSpec {
     }
     dir
   }
+
+  override def afterAll(): Unit =
+    try graft.queries.LifecycleQueries.deleteRecursively(root)
+    finally super.afterAll()
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs on empty tables") {

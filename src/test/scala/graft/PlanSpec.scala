@@ -254,32 +254,52 @@ class PlanSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("q159_plan")
-    def rel(name: String, df: org.apache.spark.sql.DataFrame) = {
-      val p = root.resolve(name).toString
-      df.write.parquet(p)
-      spark.read.parquet(p)
-    }
-    val icdcm = rel("icdcm", Seq((1L, 10L, "F640", 10))
-      .toDF("id_mcaid", "claim_header_id", "icdcm_norm", "icdcm_version"))
-    val proc = rel("proc", Seq((1L, 10L, "15757"))
-      .toDF("id_mcaid", "claim_header_id", "procedure_code"))
-    val pharm = rel("pharm", Seq((1L, "n1")).toDF("id_mcaid", "ndc"))
-    val demo = rel("demo", Seq((1L, "Female")).toDF("id_mcaid", "gender_me"))
-    val ndcRef = rel("ndcref", Seq(("n1", "ESTRADIOL", "TABLET", "1", "MG"))
-      .toDF("ndc", "nonproprietaryname", "dosageformname",
-        "active_numerator_strength", "active_ingred_unit"))
-    val optimized = graft.builds.EligDemoExtra
-      .build(icdcm, proc, pharm, demo, ndcRef).queryExecution.optimizedPlan
-    val joins = optimized.collect { case j: Join => j }.size
-    val scans = optimized.collectLeaves().collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths.head.getName
-        case other => other.toString
+    try {
+      def rel(name: String, df: org.apache.spark.sql.DataFrame) = {
+        val p = root.resolve(name).toString
+        df.write.parquet(p)
+        spark.read.parquet(p)
       }
-    }.groupBy(identity).view.mapValues(_.size).toMap
-    assert(joins <= 6, s"$joins joins:\n$optimized")
-    assert(scans.keySet === Set("icdcm", "proc", "pharm", "demo", "ndcref"),
-      s"inputs lost or unrecognised: $scans")
-    assert(scans.values.forall(_ <= 2), s"inputs re-scanned: $scans")
+      val icdcm = rel("icdcm", Seq((1L, 10L, "F640", 10))
+        .toDF("id_mcaid", "claim_header_id", "icdcm_norm", "icdcm_version"))
+      val proc = rel("proc", Seq((1L, 10L, "15757"))
+        .toDF("id_mcaid", "claim_header_id", "procedure_code"))
+      val pharm = rel("pharm", Seq((1L, "n1")).toDF("id_mcaid", "ndc"))
+      val demo = rel("demo", Seq((1L, "Female")).toDF("id_mcaid", "gender_me"))
+      val ndcRef = rel("ndcref", Seq(("n1", "ESTRADIOL", "TABLET", "1", "MG"))
+        .toDF("ndc", "nonproprietaryname", "dosageformname",
+          "active_numerator_strength", "active_ingred_unit"))
+      val optimized = graft.builds.EligDemoExtra
+        .build(icdcm, proc, pharm, demo, ndcRef).queryExecution.optimizedPlan
+      val joins = optimized.collect { case j: Join => j }.size
+      val scans = optimized.collectLeaves().collect {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.head.getName
+          case other => other.toString
+        }
+      }.groupBy(identity).view.mapValues(_.size).toMap
+      assert(joins <= 6, s"$joins joins:\n$optimized")
+      assert(scans.keySet === Set("icdcm", "proc", "pharm", "demo", "ndcref"),
+        s"inputs lost or unrecognised: $scans")
+      assert(scans.values.forall(_ <= 2), s"inputs re-scanned: $scans")
+    } finally graft.queries.LifecycleQueries.deleteRecursively(root.toFile)
+  }
+
+  test("q207 probes corpus grams in one kernel: no explode, no lambda") {
+    // the Bloom probe builds, hashes and tests each doc's grams inside one
+    // row expression; a Generate would mean one row per corpus gram, a
+    // lambda an interpreted transform over them
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform,
+      LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val optimized = SparkEntry.queries("q207_bloom_decontam")(spark, sf)
+      .queryExecution.optimizedPlan
+    val generates = optimized.collect { case g: Generate => g }
+    val lambdas = optimized.flatMap(_.expressions.flatMap(_.collect {
+      case e: LambdaFunction => e
+      case e: ArrayTransform => e
+    }))
+    assert(generates.isEmpty, s"per-gram Generate in q207:\n$optimized")
+    assert(lambdas.isEmpty, s"lambda in q207:\n$optimized")
   }
 }

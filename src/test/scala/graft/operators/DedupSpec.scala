@@ -313,12 +313,15 @@ class DedupSpec extends SparkSpec {
 
   test("wordGrams: distinct space-joined n-grams; short doc = whole text") {
     import spark.implicits._
-    val got = Seq("A  b c b c", "hi", "").toDF("t")
+    val got = Seq("A  b c b c", "hi", "", "\ta b", "a b\n").toDF("t")
       .select(Dedup.wordGrams(col("t"), 3).as("g"))
       .as[Seq[String]].collect().toSeq
     assert(got(0) == Seq("a b c", "b c b", "c b c"))
     assert(got(1) == Seq("hi"))
     assert(got(2) == Seq(""))
+    // trim strips only ' ': a tab or newline at an edge leaves an empty token
+    assert(got(3) == Seq(" a b"))
+    assert(got(4) == Seq("a b "))
   }
 
   test("bloom pre-filter is conservative: flags every exact-pass doc") {

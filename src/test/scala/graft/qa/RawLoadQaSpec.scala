@@ -3,6 +3,7 @@ package graft.qa
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
+import graft.queries.LifecycleQueries
 import graft.sources.McareRawNormalize
 import graft.sources.McareRawNormalize.DictCol
 
@@ -134,15 +135,17 @@ class RawLoadQaSpec extends SparkSpec {
     assert(McareRawNormalize.batchYear("t_2026.csv", 2024) == 2024)
     // real pipe file: header renames land, c NULL-pads, zzz drops
     val work = java.nio.file.Files.createTempDirectory("graft_nrmspec")
-    val p = s"$work/t_2023.csv"
-    Seq(("1", "2", "9")).toDF("A_LONG", "B_ALT", "ZZZ")
-      .coalesce(1).write.mode("overwrite")
-      .option("header", true).option("sep", "|").csv(p)
-    val (out, headers) = McareRawNormalize.normalizeFile(spark, p, dict)
-    assert(headers == Seq("a_long", "b_alt", "zzz"))
-    assert(out.columns.toSeq == Seq("a", "b", "c"))
-    val r = out.collect()
-    assert(r.length == 1 && r(0).getString(0) == "1" &&
-      r(0).getString(1) == "2" && r(0).isNullAt(2))
+    try {
+      val p = s"$work/t_2023.csv"
+      Seq(("1", "2", "9")).toDF("A_LONG", "B_ALT", "ZZZ")
+        .coalesce(1).write.mode("overwrite")
+        .option("header", true).option("sep", "|").csv(p)
+      val (out, headers) = McareRawNormalize.normalizeFile(spark, p, dict)
+      assert(headers == Seq("a_long", "b_alt", "zzz"))
+      assert(out.columns.toSeq == Seq("a", "b", "c"))
+      val r = out.collect()
+      assert(r.length == 1 && r(0).getString(0) == "1" &&
+        r(0).getString(1) == "2" && r(0).isNullAt(2))
+    } finally LifecycleQueries.deleteRecursively(work.toFile)
   }
 }

@@ -3,30 +3,34 @@ package graft.sources
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.queries.LifecycleQueries
 
 class LoadTableSpec extends SparkSpec {
 
   test("compact shrinks a many-file table without changing its contents") {
     val s = spark
     import s.implicits._
-    val base = Files.createTempDirectory("graft_compact").toString + "/t"
-    val df = (1L to 10000L).map(i => (i, s"v$i", i * 1.5)).toDF("id", "v", "w")
-    df.repartition(50).write.parquet(base)
-    def parquetFiles = new java.io.File(base).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles == 50)
-    val before = spark.read.parquet(base)
-      .agg(count(lit(1)), sum(col("id")), sum(col("w"))).collect()(0)
+    val root = Files.createTempDirectory("graft_compact").toFile
+    val base = s"$root/t"
+    try {
+      val df = (1L to 10000L).map(i => (i, s"v$i", i * 1.5)).toDF("id", "v", "w")
+      df.repartition(50).write.parquet(base)
+      def parquetFiles = new java.io.File(base).listFiles()
+        .count(f => f.getName.endsWith(".parquet"))
+      assert(parquetFiles == 50)
+      val before = spark.read.parquet(base)
+        .agg(count(lit(1)), sum(col("id")), sum(col("w"))).collect()(0)
 
-    LoadTable.compact(spark, base, df.schema, targetRowsPerFile = 4000L)
+      LoadTable.compact(spark, base, df.schema, targetRowsPerFile = 4000L)
 
-    assert(parquetFiles == 3, s"expected ceil(10000/4000)=3 files, got $parquetFiles")
-    val after = spark.read.parquet(base)
-      .agg(count(lit(1)), sum(col("id")), sum(col("w"))).collect()(0)
-    assert(after == before)
-    // staging/old trees are gone
-    assert(!new java.io.File(base + "_compact_staging").exists())
-    assert(!new java.io.File(base + "_compact_old").exists())
+      assert(parquetFiles == 3, s"expected ceil(10000/4000)=3 files, got $parquetFiles")
+      val after = spark.read.parquet(base)
+        .agg(count(lit(1)), sum(col("id")), sum(col("w"))).collect()(0)
+      assert(after == before)
+      // staging/old trees are gone
+      assert(!new java.io.File(base + "_compact_staging").exists())
+      assert(!new java.io.File(base + "_compact_old").exists())
+    } finally LifecycleQueries.deleteRecursively(root)
   }
 
   test("sanitizeColumn applies the CDR replacement chain in order") {
@@ -42,18 +46,19 @@ class LoadTableSpec extends SparkSpec {
   test("loadCdrRaw: noise stripped, multi-char separator, declared " +
     "all-varchar schema") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_cdr_spec").toString
-    Seq("Code One|@|Val~@~").toDF("value")
-      .coalesce(1).write.mode("overwrite").text(s"$base/h")
-    Seq("a|@|1", "b|@|2").toDF("value")
-      .coalesce(1).write.mode("overwrite").text(s"$base/d")
-    val out = LoadTable.loadCdrRaw(spark, s"$base/h", s"$base/d")
-    assert(out.columns.toSeq === Seq("code_one", "val"))
-    assert(out.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.StringType))
-    assert(out.orderBy("code_one").collect().map(_.toSeq).toSeq
-      === Seq(Seq("a", "1"), Seq("b", "2")))
+    val base = Files.createTempDirectory("graft_cdr_spec").toString
+    try {
+      Seq("Code One|@|Val~@~").toDF("value")
+        .coalesce(1).write.mode("overwrite").text(s"$base/h")
+      Seq("a|@|1", "b|@|2").toDF("value")
+        .coalesce(1).write.mode("overwrite").text(s"$base/d")
+      val out = LoadTable.loadCdrRaw(spark, s"$base/h", s"$base/d")
+      assert(out.columns.toSeq === Seq("code_one", "val"))
+      assert(out.schema.fields.forall(_.dataType ==
+        org.apache.spark.sql.types.StringType))
+      assert(out.orderBy("code_one").collect().map(_.toSeq).toSeq
+        === Seq(Seq("a", "1"), Seq("b", "2")))
+    } finally LifecycleQueries.deleteRecursively(new java.io.File(base))
   }
 
   test("deleteDataYear: yyyymm int and DATE columns delete the year, " +
