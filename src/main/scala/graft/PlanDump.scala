@@ -1,27 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: write `.explain("formatted")` for a comma-separated list of
-  * catalog queries to <outDir>/<name>_<suffix>.txt — the optimization
-  * rounds' plan-evidence artifact (plans/rNN/). Plans only; nothing is
+  * catalog queries to <outDir>/<name>_<suffix>.txt (suffix defaults to
+  * `before`) — plan evidence for an optimization. Plans only; nothing is
   * executed except what a query's own construction executes (e.g. a
   * chain runner's writes). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: PlanDump <query prefixes, comma-separated> <outDir> [suffix]")
     val names = args(0).split(",").toSeq
-    val outDir = args.drop(1).headOption.getOrElse("plans/r14")
+    val outDir = args(1)
     val suffix = args.drop(2).headOption.getOrElse("before")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val full = SparkEntry.queries.keys.find(_.startsWith(n)).getOrElse(n)

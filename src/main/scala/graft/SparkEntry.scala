@@ -69,7 +69,7 @@ object SparkEntry {
     * watermark-finalized windows are emitted — the oracle applies the same
     * cutoff). */
   def qStream(s: SparkSession, dir: String): DataFrame =
-    EventStream.hourlyRollup(s, dir, "graft_stream_hourly")
+    EventStream.hourlyRollup(s, dir)
       .select(col("hour_ts").as("hour_start"), col("event_type"),
         col("n"), col("val"))
       .orderBy(col("hour_start"), col("event_type"))
@@ -107,8 +107,8 @@ object SparkEntry {
   def qStreamNearDup(s: SparkSession, dir: String): DataFrame =
     graft.streaming.DocStream.nearDupGate(s, dir)
 
-  /** One entry per implemented operator from SURVEY.md §2. Insertion-ordered
-    * (ListMap) so Bench timings are stable round-over-round. */
+  /** One entry per implemented operator from SURVEY.md §2, in insertion
+    * order (ListMap). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     scala.collection.immutable.ListMap(
     "q01_agg" -> (R.q1Agg _),

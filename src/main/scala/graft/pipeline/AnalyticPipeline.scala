@@ -319,7 +319,7 @@ object AnalyticPipeline {
     val jobGroup = s"graft-chain-${java.util.UUID.randomUUID()}"
     @volatile var aborted = false
     var completed = false
-    val work = Files.createTempDirectory("graft_pipeline")
+    val work = graft.Scratch.dir(s, "pipeline")
     try {
       // run-scoped metadata.qa_mcaid analog (see Qa.LoadLog — an
       // in-memory log; Qa.LoadLog synchronizes internally)
@@ -476,7 +476,7 @@ object AnalyticPipeline {
         catch { case NonFatal(_) => () }
       pool.shutdownNow()
       pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      graft.queries.LifecycleQueries.deleteRecursively(work.toFile)
+      graft.Scratch.delete(work)
     }
   }
 }

@@ -3,65 +3,13 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{BatchExport, Bucketing, EtlLog, LoadTable, Scd2, TableConfig}
+import graft.Scratch
 import graft.queries.Q.t
 
 /** Table-lifecycle catalog: YAML-declared schemas, CSV/ORC source+sink
   * roundtrips, create-table shell, and the incremental-refresh write path
   * (SURVEY §2.1 rows 1, 2, 4, 7, 8). */
 object LifecycleQueries {
-
-  /** Per-application scratch root under java.io.tmpdir, cleaned up on JVM
-    * exit (shutdown hook) — plus an age-guarded sweep of stale siblings
-    * left by crashed runs. The applicationId tag keeps two concurrent
-    * same-user sessions from racing on one path (r4); without cleanup each
-    * run leaked a fresh tree forever (ADVICE r5).
-    *
-    * Liveness: each session TOUCHES its root's mtime on every access
-    * (files written deep inside a tree do not update the root's mtime, so
-    * the root's own timestamp would otherwise go stale under a live
-    * long-running query), and the sweep only removes siblings whose root
-    * has not been touched for > 6 h — a crashed run's leak is bounded at
-    * hours while a live concurrent session refreshing per query is never
-    * yanked out from under. */
-  private val hooked = scala.collection.mutable.Set.empty[String]
-  private def scratchRoot(s: SparkSession, kind: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val prefix = s"graft_${kind}_${sys.props("user.name")}_"
-    val cur = s"$prefix${s.sparkContext.applicationId}"
-    val staleBefore = System.currentTimeMillis() - 6L * 60 * 60 * 1000
-    // a sibling is live if EITHER its root mtime or its fallback
-    // heartbeat file is fresh (see below: some filesystems ignore
-    // setLastModified on directories)
-    def liveStamp(f: java.io.File): Long = math.max(f.lastModified(),
-      new java.io.File(f, ".heartbeat").lastModified())
-    Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) && f.getName != cur &&
-        liveStamp(f) < staleBefore)
-      .foreach(deleteRecursively)
-    val root = new java.io.File(tmp, cur)
-    root.mkdirs()
-    // liveness heartbeat: setLastModified silently returns false on some
-    // filesystems — fall back to touching a heartbeat file inside the
-    // root (ordinary file writes update mtime everywhere), so a live
-    // session is never swept as stale by a concurrent one
-    if (!root.setLastModified(System.currentTimeMillis())) {
-      val hb = new java.io.File(root, ".heartbeat")
-      java.nio.file.Files.write(hb.toPath, Array.emptyByteArray)
-      root.setLastModified(System.currentTimeMillis())
-    }
-    hooked.synchronized {
-      if (hooked.add(root.getPath))
-        sys.addShutdownHook(deleteRecursively(root))
-    }
-    root.getPath
-  }
-
-  /** Recursive delete that never throws: a leftover scratch file must
-    * not mask the caller's own outcome. */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
 
   private val ordersYaml = """
 table: stage.orders_export
@@ -91,7 +39,7 @@ vars:
     // shell: declared-schema empty frame (create_table.R) — unioning it in
     // proves schema parity between the shell and both reloads
     val shell = TableConfig.emptyFrame(s, cfg).withColumn("fmt", lit("shell"))
-    val base = scratchRoot(s, "lifecycle")
+    val base = Scratch.root(s).resolve("lifecycle").toString
     LoadTable.exportCsv(typed, s"$base/csv")
     LoadTable.exportOrc(typed, s"$base/orc")
     val fromCsv = LoadTable.loadCsv(s, s"$base/csv", cfg).withColumn("fmt", lit("csv"))
@@ -174,7 +122,7 @@ table_1998:
     val cut = "1997-07-01"
     val ordersD = t(s, dir, "orders")
       .withColumn("o_orderdate", to_date(col("o_orderdate")))
-    val base = scratchRoot(s, "refresh")
+    val base = Scratch.root(s).resolve("refresh").toString
     val stale = ordersD.filter(col("o_orderdate") >= cut)
       .withColumn("o_totalprice", lit(-1.0))
     val initial = ordersD.filter(col("o_orderdate") < cut)
@@ -200,11 +148,10 @@ table_1998:
     * hint keeps the demo on the sort-merge path even when one side would
     * broadcast at test scale. */
   def q74BucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    // Fixed per-application base dir, overwritten on re-runs within the
-    // session, swept + shutdown-hooked by scratchRoot (DROP TABLE leaves
-    // external paths behind, and a fresh temp dir per invocation would
-    // leak one tree per run).
-    val base = scratchRoot(s, "bucketed")
+    // Fixed per-session base dir, overwritten on re-runs within the
+    // session: the table names derive from it, so a fresh dir per
+    // invocation would register two new catalog tables per run.
+    val base = Scratch.root(s).resolve("bucketed").toString
     val tag = Integer.toHexString(base.hashCode)
     Bucketing.writeBucketed(t(s, dir, "orders"),
       s"graft_b_orders_$tag", s"$base/orders", "o_orderkey", 8)
@@ -228,7 +175,7 @@ table_1998:
     * parse or a mis-sanitized column breaks the oracle hash). */
   def q201CdrRawLoad(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = scratchRoot(s, "cdr_raw")
+    val base = Scratch.root(s).resolve("cdr_raw").toString
     t(s, dir, "customer")
       .select(concat_ws("|@|",
         col("c_custkey").cast("string"), col("c_name"),
@@ -288,7 +235,7 @@ vars:
       .withColumn("_bs", BatchExport.batchSizeCol(col("_n"), 7))
       .withColumn("file_number",
         BatchExport.fileNumberOf(col("rownum"), col("_bs")))
-    val base = scratchRoot(s, "batch_export")
+    val base = Scratch.root(s).resolve("batch_export").toString
     staged
       .select(col("file_number") +:
         fmt.map { case (c, _, _) => BatchExport.exportCol(col(c)).as(c) }: _*)
@@ -784,7 +731,7 @@ vars:
       .when(pk % 3 === 1,
         concat(lit("B"), lpad(pk.cast("string"), 4, "0"), lit("X")))
       .otherwise(concat(lit("C"), lpad(pk.cast("string"), 3, "0")))
-    val work = java.nio.file.Files.createTempDirectory("graft_icd")
+    val work = Scratch.dir(s, "icd")
     val years = (2019 to 2023).map { y =>
       val desc = when(pk % 5 === 0,
           concat(lit("DESC "), code, lit(" REV "), lit(y - 2019)))
@@ -1643,7 +1590,7 @@ vars:
       "race_id" -> "TINYINT",
       "race_desc" -> "VARCHAR(255)"), Seq.empty)
     val rows = ethnicityMapRows(s, dir)
-    val work = java.nio.file.Files.createTempDirectory("graft_ethmap")
+    val work = Scratch.dir(s, "ethmap")
     val tbl = s"$work/ref_apcd_ethnicity_race_map"
     def loadOnce(df: DataFrame, tag: String): Unit = {
       val csv = s"$work/apcd_ethnicity_race_mapping_$tag.csv"
@@ -1688,7 +1635,7 @@ vars:
       "source_desc" -> "VARCHAR(255)",
       "kc_clm_type_id" -> "TINYINT",
       "kc_clm_type_desc" -> "VARCHAR(255)"), Seq.empty)
-    val work = java.nio.file.Files.createTempDirectory("graft_kcxwalk")
+    val work = Scratch.dir(s, "kcxwalk")
     val csv = s"$work/kc_claim_type_crosswalk.csv"
     rows.coalesce(1).write.mode("overwrite")
       .option("header", true).csv(csv)
@@ -1756,7 +1703,7 @@ vars:
         .as("Provider Business Practice Location Address State Name"),
       lpad((ck % 99999).cast("string"), 5, "0")
         .as("Provider Business Practice Location Address Postal Code"))
-    val work = java.nio.file.Files.createTempDirectory("graft_nppes")
+    val work = Scratch.dir(s, "nppes")
     val csv = s"$work/npidata.csv"
     raw.coalesce(1).write.mode("overwrite")
       .option("header", true).csv(csv)
@@ -1792,7 +1739,7 @@ vars:
 
   private def mcareRawFiles(s: SparkSession,
       dir: String): Seq[(String, String)] = {
-    val work = java.nio.file.Files.createTempDirectory("graft_mcare_raw")
+    val work = Scratch.dir(s, "mcare_raw")
     val ck = col("c_custkey")
     val fa = t(s, dir, "customer").select(
       concat(lit("B"), lpad((ck % 900).cast("string"), 6, "0"))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** Source/sink lifecycle: the reference's bcp CSV load, COPY INTO
   * (csv/parquet/orc), CSV export, and the archive/partial-date incremental
@@ -164,11 +165,11 @@ object LoadTable {
         // best-effort drop the staging tree either way.
         try Files.move(tmp, old, StandardCopyOption.ATOMIC_MOVE)
         catch { case rb: Throwable => e.addSuppressed(rb) }
-        try deleteTree(Paths.get(staging)) catch { case _: Throwable => () }
+        Scratch.delete(Paths.get(staging))
         throw e
     }
     // best-effort cleanup of the replaced tree
-    deleteTree(tmp)
+    Scratch.delete(tmp)
   }
 
   /** Expiring-DUA data-year delete
@@ -204,14 +205,4 @@ object LoadTable {
     if (!deletableDateCols.contains(dateCol)) None
     else Some(df.filter(
       !col(dateCol).cast("string").startsWith(year.toString)))
-
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally walk.close()
-    }
-  }
 }

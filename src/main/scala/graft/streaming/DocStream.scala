@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Dedup
 
 /** Streaming document pipelines — the INGEST-time siblings of the batch
@@ -12,17 +10,6 @@ import graft.operators.Dedup
   * against a static view of the existing corpus before admission.
   */
 object DocStream {
-
-  /** File stream over the documents table (the events symlink
-    * discipline: Spark's file source needs a DIRECTORY). */
-  private def docsStream(s: SparkSession, dir: String,
-      tmpName: String): DataFrame = {
-    val batchSchema = s.read.parquet(s"$dir/documents.parquet").schema
-    val srcDir = Files.createTempDirectory(tmpName)
-    Files.createSymbolicLink(srcDir.resolve("documents.parquet"),
-      Paths.get(s"$dir/documents.parquet"))
-    s.readStream.schema(batchSchema).parquet(srcDir.toString)
-  }
 
   /** Streaming near-duplicate ADMISSION GATE — the production shape of
     * minhash dedup (q38/q216): the corpus slice (doc_id % 10 = 0) is
@@ -75,22 +62,13 @@ object DocStream {
           col("bk.bh").as("bh"))
     }
     val staticIdx = bandRows(corpus, "corpus_id")
-    val stream = docsStream(s, dir, "graft_stream_neardup_src")
+    val stream = EventStream.fileStream(s, s"$dir/documents.parquet")
       .filter(col("doc_id") % 10 =!= 0)
     val hits = bandRows(stream, "in_id")
       .join(broadcast(staticIdx), Seq("band", "bh"))
       .select(col("in_id"), col("corpus_id"))
-    val base = Files.createTempDirectory("graft_stream_neardup").toString
-    val q = hits.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
     // exact verification of the streamed candidates (batch)
-    val pairs = s.read.schema(hits.schema).parquet(s"$base/data")
+    val pairs = EventStream.drain(hits)
       .select(least(col("in_id"), col("corpus_id")).as("id_a"),
         greatest(col("in_id"), col("corpus_id")).as("id_b"))
       .distinct()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -27,10 +28,10 @@ object EventStream {
   /** Watermark delay for [[hourlyRollup]]. */
   val DelaySeconds: Long = 3600L
 
-  /** Stage the events file behind a temp directory (FileStreamSource needs
-    * a *directory* — single-file paths fail with "Option 'basePath' must be
-    * a directory", the silent r2 q48 killer) and open it as a stream with
-    * the event-time column normalized to plain TIMESTAMP.
+  /** Stage the events file behind a scratch directory (FileStreamSource
+    * needs a *directory* — single-file paths fail with "Option 'basePath'
+    * must be a directory", the silent r2 q48 killer) and open it as a
+    * stream with the event-time column normalized to plain TIMESTAMP.
     *
     * Normalization is shared with the batch reader ([[graft.queries.Q
     * .normalizeTs]]) so batch and stream agree on the same instant for
@@ -41,17 +42,42 @@ object EventStream {
     *
     * `copies` > 1 links the same file N times so every event genuinely
     * arrives duplicated (used by [[dedupStream]]). */
-  private def eventsStream(s: SparkSession, dir: String, tmpName: String,
+  private def eventsStream(s: SparkSession, dir: String,
       copies: Int = 1): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-    val srcDir = Files.createTempDirectory(tmpName)
+    graft.queries.Q.normalizeTs(fileStream(s, s"$dir/events.parquet", copies))
+  }
+
+  /** `file` opened as a stream: the file source reads directories only,
+    * so a scratch dir holds `copies` symbolic links to it. */
+  private[streaming] def fileStream(s: SparkSession, file: String,
+      copies: Int = 1): DataFrame = {
+    val src = Scratch.dir(s, "stream_src")
+    val stem = Paths.get(file).getFileName.toString.stripSuffix(".parquet")
     (1 to copies).foreach { i =>
-      Files.createSymbolicLink(srcDir.resolve(s"events_$i.parquet"),
-        Paths.get(s"$dir/events.parquet"))
+      Files.createSymbolicLink(src.resolve(s"${stem}_$i.parquet"),
+        Paths.get(file))
     }
-    graft.queries.Q.normalizeTs(
-      s.readStream.schema(batchSchema).parquet(srcDir.toString))
+    s.readStream.schema(s.read.parquet(file).schema).parquet(src.toString)
+  }
+
+  /** Runs `df` to completion through an append-mode parquet sink in a
+    * fresh scratch dir (Trigger.AvailableNow) and reads the sink back.
+    * The dir lives as long as the session, because the returned frame
+    * reads it lazily. The schema is explicit: an all-withheld (or
+    * empty-input) run writes no files, and schema inference over the
+    * empty sink dir would fail. */
+  private[streaming] def drain(df: DataFrame): DataFrame = {
+    val base = Scratch.dir(df.sparkSession, "stream_sink")
+    val q = df.writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", s"$base/data")
+      .option("checkpointLocation", s"$base/checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    df.sparkSession.read.schema(df.schema).parquet(s"$base/data")
   }
 
   /** Hour windows with `window.end <= max(ts) - delay` are guaranteed
@@ -88,7 +114,7 @@ object EventStream {
   def sessionizeStream(s: SparkSession, dir: String,
       gapSeconds: Long = 1800L): DataFrame = {
     import s.implicits._
-    val stream = eventsStream(s, dir, "graft_stream_sess_src")
+    val stream = eventsStream(s, dir)
     val gapMicros = gapSeconds * 1000000L
     val typed: Dataset[SEv] = stream
       .withWatermark("ts", s"$DelaySeconds seconds")
@@ -130,18 +156,7 @@ object EventStream {
             out.iterator
           }
       }
-    val base = Files.createTempDirectory("graft_stream_sess").toString
-    val q = sessions.toDF().writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // explicit schema: an all-withheld (or empty-input) run writes no files,
-    // and schema inference over the empty sink dir would fail
-    s.read.schema(sessions.toDF().schema).parquet(s"$base/data")
+    drain(sessions.toDF())
       .orderBy(col("user_id"), col("session_start"))
   }
 
@@ -153,20 +168,11 @@ object EventStream {
     * event genuinely arrives duplicated and the dedup is load-bearing:
     * output rows must equal the batch-distinct of the input. */
   def dedupStream(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_dedup_src", copies = 2)
+    val stream = eventsStream(s, dir, copies = 2)
     val deduped = stream
       .withWatermark("ts", s"$DelaySeconds seconds")
       .dropDuplicatesWithinWatermark("event_id")
-    val base = Files.createTempDirectory("graft_stream_dedup").toString
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.read.schema(deduped.schema).parquet(s"$base/data")
+    drain(deduped)
   }
 
   /** Stream-static enrichment: the streaming events joined against a
@@ -182,7 +188,7 @@ object EventStream {
     * A filter on the dim side (`onlyEven`) exercises the pushdown: the
     * static scan, not the stream, shrinks. */
   def enrichedRollup(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_enrich_src")
+    val stream = eventsStream(s, dir)
     val dim = s.read.parquet(s"$dir/customer.parquet")
       .filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey").cast("long").as("user_id"),
@@ -194,16 +200,7 @@ object EventStream {
       .withColumn("segment", coalesce(col("segment"), lit("UNKNOWN")))
       .groupBy(window(col("ts"), "1 hour"), col("segment"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("val"))
-    val base = Files.createTempDirectory("graft_stream_enrich").toString
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.read.schema(agg.schema).parquet(s"$base/data")
+    drain(agg)
       .select(col("segment"), col("window.start").as("hour_start"),
         col("n"), round(col("val"), 2).as("val"))
       .orderBy(col("segment"), col("hour_start"))
@@ -234,39 +231,8 @@ object EventStream {
     * per-partition commit floor, not data, dominates).
     */
   def clickPurchaseJoin(s: SparkSession, dir: String,
-      statePartitions: Int = 8): DataFrame = {
-    def src(): DataFrame = eventsStream(s, dir, "graft_stream_join_src")
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", s"$DelaySeconds seconds")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", s"$DelaySeconds seconds")
-    val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("click_id"), col("purchase_id"), col("user_id"),
-        floor((unix_micros(col("purchase_ts")) -
-          unix_micros(col("click_ts"))) / lit(1000000L)).as("gap_sec"))
-    val base = Files.createTempDirectory("graft_stream_join").toString
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.read.schema(joined.schema).parquet(s"$base/data")
-      .orderBy(col("click_id"), col("purchase_id"))
-  }
+      statePartitions: Int = 8): DataFrame =
+    clickPurchase(s, dir, statePartitions, "inner")
 
   /** Stream-stream LEFT OUTER interval join (q199) — the attribution
     * variant that also emits clicks that never converted. Matched pairs
@@ -281,8 +247,12 @@ object EventStream {
     * `click_ts + 1h < min(max(click_ts), max(purchase_ts)) - delay`.
     */
   def clickPurchaseLeftJoin(s: SparkSession, dir: String,
-      statePartitions: Int = 8): DataFrame = {
-    def src(): DataFrame = eventsStream(s, dir, "graft_stream_loj_src")
+      statePartitions: Int = 8): DataFrame =
+    clickPurchase(s, dir, statePartitions, "left_outer")
+
+  private def clickPurchase(s: SparkSession, dir: String,
+      statePartitions: Int, joinType: String): DataFrame = {
+    def src(): DataFrame = eventsStream(s, dir)
     val clicks = src().filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -295,47 +265,26 @@ object EventStream {
         col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-        "left_outer")
+        joinType)
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         floor((unix_micros(col("purchase_ts")) -
           unix_micros(col("click_ts"))) / lit(1000000L)).as("gap_sec"))
-    val base = Files.createTempDirectory("graft_stream_loj").toString
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.read.schema(joined.schema).parquet(s"$base/data")
-      .orderBy(col("click_id"), col("purchase_id"))
+    val out = try drain(joined)
+      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    out.orderBy(col("click_id"), col("purchase_id"))
   }
 
   /** Tumbling 1-hour event-time aggregation of the events table, executed
     * through the streaming engine (readStream -> watermark -> window agg ->
     * append-mode parquet sink), then read back as a DataFrame. */
-  def hourlyRollup(s: SparkSession, dir: String, name: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_src")
-    val agg = stream
+  def hourlyRollup(s: SparkSession, dir: String): DataFrame = {
+    val agg = eventsStream(s, dir)
       .withWatermark("ts", s"$DelaySeconds seconds")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("val"))
-    val base = Files.createTempDirectory(s"graft_stream_$name").toString
-    val dataDir = s"$base/data"
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", dataDir)
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.read.schema(agg.schema).parquet(dataDir)
+    drain(agg)
       .select(col("event_type"), col("window.start").as("hour_ts"),
         col("n"), round(col("val"), 2).as("val"))
       .orderBy(col("event_type"), col("hour_ts"))
@@ -351,7 +300,7 @@ object EventStream {
     * partitioned into train/valid/test consistently with the batch
     * pipeline's split of the same keys. */
   def splitRollup(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_split_src")
+    val stream = eventsStream(s, dir)
     val split = graft.operators.TextAnalysis.hashSplit(
       stream.withColumn("user_id", col("user_id").cast("long")),
       "user_id")
@@ -359,28 +308,12 @@ object EventStream {
       .withWatermark("ts", s"$DelaySeconds seconds")
       .groupBy(window(col("ts"), "1 hour"), col("split"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("val"))
-    val base = Files.createTempDirectory("graft_stream_split").toString
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.read.schema(agg.schema).parquet(s"$base/data")
+    drain(agg)
       .select(col("split"), col("window.start").as("hour_start"),
         col("n"), round(col("val"), 2).as("val"))
       .orderBy(col("split"), col("hour_start"))
   }
 
-  /** Streaming Count-Min grid: the [[graft.operators.Sketches]] cell
-    * explode is a stateless projection riding the stream, so the hourly
-    * per-(row, bucket) counts are an ordinary watermarked window agg —
-    * a live per-hour frequency sketch of the event-type firehose,
-    * emitted append-mode as each hour's grid finalizes. State is the
-    * open windows' depth x width cells, bounded regardless of stream
-    * length or item cardinality — the point of sketching a firehose. */
   /** Streaming distribution-DRIFT monitor — the data-quality alarm a
     * production ingest runs against its firehose: per event-time hour,
     * the Jensen-Shannon divergence between that hour's event-type
@@ -398,21 +331,12 @@ object EventStream {
     * At 100 TB the emitted rollup is (hours x types) rows — the JSD
     * pass costs nothing; alert thresholds go on the `jsd` column. */
   def driftMonitor(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_drift_src")
+    val stream = eventsStream(s, dir)
     val agg = stream
       .withWatermark("ts", s"$DelaySeconds seconds")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val base = Files.createTempDirectory("graft_stream_drift").toString
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val hourly = s.read.schema(agg.schema).parquet(s"$base/data")
+    val hourly = drain(agg)
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n"))
     val events = graft.queries.Q.t(s, dir, "events")
@@ -450,23 +374,14 @@ object EventStream {
     * integer estimator the batch sketch uses (q255), joined to the
     * exact per-hour distinct for the self-reported error column. */
   def hllRollup(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_hll_src")
+    val stream = eventsStream(s, dir)
     val ranked = graft.operators.Sketches.withHllRank(stream,
       col("user_id"))
     val agg = ranked
       .withWatermark("ts", s"$DelaySeconds seconds")
       .groupBy(window(col("ts"), "1 hour"), col("_reg"))
       .agg(max(col("_rank")).as("_m"))
-    val base = Files.createTempDirectory("graft_stream_hll").toString
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val regs = s.read.schema(agg.schema).parquet(s"$base/data")
+    val regs = drain(agg)
       .select(col("window.start").as("hour_start"), col("_reg"),
         col("_m"))
     val est = graft.operators.Sketches.intHllFromRegisters(regs,
@@ -482,24 +397,22 @@ object EventStream {
       .orderBy(col("hour_start"))
   }
 
+  /** Streaming Count-Min grid: the [[graft.operators.Sketches]] cell
+    * explode is a stateless projection riding the stream, so the hourly
+    * per-(row, bucket) counts are an ordinary watermarked window agg —
+    * a live per-hour frequency sketch of the event-type firehose,
+    * emitted append-mode as each hour's grid finalizes. State is the
+    * open windows' depth x width cells, bounded regardless of stream
+    * length or item cardinality — the point of sketching a firehose. */
   def cmsRollup(s: SparkSession, dir: String): DataFrame = {
-    val stream = eventsStream(s, dir, "graft_stream_cms_src")
+    val stream = eventsStream(s, dir)
     val cells = graft.operators.Sketches.withCells(
       stream, col("event_type"), depth = 4, width = 256)
     val agg = cells
       .withWatermark("ts", s"$DelaySeconds seconds")
       .groupBy(window(col("ts"), "1 hour"), col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
-    val base = Files.createTempDirectory("graft_stream_cms").toString
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.read.schema(agg.schema).parquet(s"$base/data")
+    drain(agg)
       .select(col("window.start").as("hour_start"),
         col("row").as("grid_row"), col("bucket"), col("cnt"))
       .orderBy(col("hour_start"), col("grid_row"), col("bucket"))

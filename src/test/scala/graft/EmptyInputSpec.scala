@@ -17,7 +17,7 @@ class EmptyInputSpec extends SparkSpec {
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val root = Files.createTempDirectory("graft_empty_sf").toFile
+  private val root = Files.createTempDirectory("graft_empty_sf")
 
   private lazy val emptyDir: String = {
     val dir = root.toString
@@ -32,7 +32,7 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   override def afterAll(): Unit =
-    try graft.queries.LifecycleQueries.deleteRecursively(root)
+    try Scratch.delete(root)
     finally super.afterAll()
 
   SparkEntry.queries.foreach { case (name, fn) =>

@@ -282,7 +282,7 @@ class PlanSpec extends SparkSpec {
       assert(scans.keySet === Set("icdcm", "proc", "pharm", "demo", "ndcref"),
         s"inputs lost or unrecognised: $scans")
       assert(scans.values.forall(_ <= 2), s"inputs re-scanned: $scans")
-    } finally graft.queries.LifecycleQueries.deleteRecursively(root.toFile)
+    } finally Scratch.delete(root)
   }
 
   test("q207 probes corpus grams in one kernel: no explode, no lambda") {

@@ -23,11 +23,11 @@ class PipelineSpec extends SparkSpec {
     (s, _) => { import s.implicits._
       Seq(1L, 1L, 2L).toDF("id") }
 
-  /** The runner's work dirs currently under java.io.tmpdir. */
+  /** The runner's work dirs currently under the session's scratch root. */
   private def runDirs(): Set[String] =
-    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+    Option(graft.Scratch.root(spark).toFile.list())
       .getOrElse(Array.empty[String])
-      .filter(_.startsWith("graft_pipeline")).toSet
+      .filter(_.startsWith("pipeline_")).toSet
 
   /** Polls `cond` for up to `secs` seconds. */
   private def eventually(secs: Double)(cond: => Boolean): Boolean = {

@@ -2,7 +2,7 @@ package graft.qa
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.queries.LifecycleQueries
+import graft.Scratch
 
 /** The fused one-scan QA path must report exactly what the per-check
   * functions report — on data with real defects (dup keys, nulls,
@@ -88,7 +88,7 @@ class QaSpec extends SparkSpec {
       assert(log.map(_.getAs[Long]("load_seq")).toSeq == Seq(1L, 2L, 3L, 4L))
       val other = Qa.loadGate(Seq(9L).toDF("id"), "u", meta)
       assert(other.pass && other.expected == 0L)
-    } finally LifecycleQueries.deleteRecursively(new java.io.File(dir))
+    } finally Scratch.delete(java.nio.file.Paths.get(dir))
   }
 
   test("fused checks on an empty frame: distinct passes, minRows fails") {

@@ -3,7 +3,7 @@ package graft.qa
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.queries.LifecycleQueries
+import graft.Scratch
 import graft.sources.McareRawNormalize
 import graft.sources.McareRawNormalize.DictCol
 
@@ -146,6 +146,6 @@ class RawLoadQaSpec extends SparkSpec {
       val r = out.collect()
       assert(r.length == 1 && r(0).getString(0) == "1" &&
         r(0).getString(1) == "2" && r(0).isNullAt(2))
-    } finally LifecycleQueries.deleteRecursively(work.toFile)
+    } finally Scratch.delete(work)
   }
 }

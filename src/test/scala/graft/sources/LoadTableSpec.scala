@@ -3,14 +3,14 @@ package graft.sources
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.queries.LifecycleQueries
+import graft.Scratch
 
 class LoadTableSpec extends SparkSpec {
 
   test("compact shrinks a many-file table without changing its contents") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft_compact").toFile
+    val root = Files.createTempDirectory("graft_compact")
     val base = s"$root/t"
     try {
       val df = (1L to 10000L).map(i => (i, s"v$i", i * 1.5)).toDF("id", "v", "w")
@@ -30,7 +30,7 @@ class LoadTableSpec extends SparkSpec {
       // staging/old trees are gone
       assert(!new java.io.File(base + "_compact_staging").exists())
       assert(!new java.io.File(base + "_compact_old").exists())
-    } finally LifecycleQueries.deleteRecursively(root)
+    } finally Scratch.delete(root)
   }
 
   test("sanitizeColumn applies the CDR replacement chain in order") {
@@ -46,7 +46,7 @@ class LoadTableSpec extends SparkSpec {
   test("loadCdrRaw: noise stripped, multi-char separator, declared " +
     "all-varchar schema") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_cdr_spec").toString
+    val base = Files.createTempDirectory("graft_cdr_spec")
     try {
       Seq("Code One|@|Val~@~").toDF("value")
         .coalesce(1).write.mode("overwrite").text(s"$base/h")
@@ -58,7 +58,7 @@ class LoadTableSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType))
       assert(out.orderBy("code_one").collect().map(_.toSeq).toSeq
         === Seq(Seq("a", "1"), Seq("b", "2")))
-    } finally LifecycleQueries.deleteRecursively(new java.io.File(base))
+    } finally Scratch.delete(base)
   }
 
   test("deleteDataYear: yyyymm int and DATE columns delete the year, " +

@@ -20,7 +20,7 @@ class EventStreamSpec extends SparkSpec {
         col("n"), col("val"))
       .orderBy("event_type", "hour_ts")
       .collect().map(_.toString)
-    val streamed = EventStream.hourlyRollup(spark, sf, "spec_stream")
+    val streamed = EventStream.hourlyRollup(spark, sf)
       .orderBy("event_type", "hour_ts")
       .collect().map(_.toString)
     assert(streamed.length == batch.length,
