@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DateFns
 
 /** The reference's original Medicaid cohort stored-procedure family
   * (analysis/Medicaid claims functions/sp_mcaidcohort_r_step1.sql:1-335,
@@ -144,7 +145,7 @@ object McaidCohort {
     val ids = idsInWindow(eligOverall, p)
 
     // ---- step 2: demo ----
-    val age0 = floor((datediff(wTo, col("dobnew")) + 1) / 365.25)
+    val age0 = DateFns.ageYears(col("dobnew"), wTo)
     val age = when(age0 >= 0, age0).when(age0 === -1, lit(0))
     val flagPred = p.flagFilters.foldLeft(lit(true)) {
       case (acc, (name, v)) => acc && col(name) === v

@@ -3,6 +3,7 @@ package graft.builds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DateFns
 
 /** apcd_elig_plr_YYYY — the full APCD person-level rollup
   * (load_stage.apcd_elig_plr.R:42-360), the year-scoped "person-level
@@ -151,7 +152,7 @@ object ApcdEligPlr {
       .groupBy(col("ach_id")).agg(sum(col("d")).as("geo_ach_covd"))
 
     // ---- step 5: demographics with the capped-age rule ----
-    val rawAge = floor((datediff(to, col("dob")) + 1) / 365.25)
+    val rawAge = DateFns.ageYears(col("dob"), to)
     val demoAged = demo.select(col("id_apcd").as("demo_id"),
       col("gender_me"), col("gender_recent"), col("gender_female"),
       col("gender_male"), col("race_eth_me"), col("race_me"),

@@ -2,6 +2,7 @@ package graft.builds
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.DateFns
 
 /** APCD pregnancy-episode build — the reference's
   * load_stage.apcd_claim_preg_episode.R (the APCD re-run of the Moll
@@ -87,8 +88,7 @@ object ApcdPregEpisode {
     * subset. `demo` carries (id_person, dob, ninety_only); episodes keep
     * all their columns and gain age_at_outcome / age_at_outcome_cat6. */
   def withAgeAtOutcome(episodes: DataFrame, demo: DataFrame): DataFrame = {
-    val raw = floor((datediff(col("preg_end_date"), col("dob")) + 1)
-      / 365.25)
+    val raw = DateFns.ageYears(col("dob"), col("preg_end_date"))
     val age = when(raw >= 90 || col("ninety_only") === 1, 90)
       .when(raw >= 0, raw)
       .when(raw === -1, 0)

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** mcaid perf elig member-month feeder
-  * (load_stage.mcaid_perf_elig_member_month.R) + the distinct-member
-  * shell (load_stage.mcaid_perf_distinct_member.R):
+  * (load_stage.mcaid_perf_elig_member_month.R):
   *
   *  - raw-elig projection with the managed-care plan-name recode (five
   *    named plans → 4-char codes, any other MC plan → NULL, non-MC →
@@ -18,8 +17,10 @@ import org.apache.spark.sql.functions._
   *    ties fall to physical order — so every remaining column is
   *    appended to the ordering as a deterministic pin (identical rows
   *    are interchangeable; differing rows pick the same one on every
-  *    engine);
-  *  - distinct-member: DISTINCT ids off the enroll-denom table.
+  *    engine).
+  * The distinct-member shell (load_stage.mcaid_perf_distinct_member.R)
+  * is a plain DISTINCT over the enroll-denom ids, with no kernel of its
+  * own.
   *
   * Scale shape: one broadcast ZIP join + one (member, month)-keyed
   * window — the same partitioning the downstream perf builds consume.
@@ -71,8 +72,4 @@ object PerfEligMemberMonth {
       .filter(col("row_num") === 1)
       .drop("row_num")
   }
-
-  /** The distinct-member shell off enroll-denom. */
-  def distinctMember(enrollDenom: DataFrame, idCol: String): DataFrame =
-    enrollDenom.select(col(idCol)).distinct()
 }

@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * Export prep (STEP 2): clinical rows subset to the cohort, DISTINCT
   * collapsed, and — the May-2026 IRB revision — only rows whose
   * service date is on/after the person's 18th birthday are shared;
-  * dates of birth leave only as a single-year age at a fixed census
-  * date (the sproc age kernel).
+  * dates of birth never enter the kept columns.
   *
   * Scale: the cohort build is one aggregation keyed on the person id
   * with the index and ZIP refs broadcast; every export is a broadcast
@@ -90,13 +89,6 @@ object StudyExtract {
         col("dob_18"))
     mpmFinal.unionByName(chrFinal).distinct()
   }
-
-  /** Single-year age at a fixed census date — the export's only
-    * outbound form of a date of birth (the sproc age kernel:
-    * floor((datediff+1)/365.25), future dobs -> NULL). */
-  def singleYearAge(dob: Column, asOf: Column): Column =
-    when(datediff(asOf, dob) >= 0,
-      floor((datediff(asOf, dob) + 1) / 365.25)).cast("int")
 
   /** Clinical-table export prep: cohort subset, DISTINCT collapse, and
     * the 18+-at-service-date row gate. Identifier columns simply never

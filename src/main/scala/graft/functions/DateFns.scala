@@ -12,18 +12,10 @@ object DateFns {
   def datediffMonth(a: Column, b: Column): Column =
     (year(b) * 12 + month(b)) - (year(a) * 12 + month(a))
 
-  /** T-SQL DATEDIFF(year, a, b): calendar-year boundary count. */
-  def datediffYear(a: Column, b: Column): Column = year(b) - year(a)
-
   /** Exact age at `asof`, reference idiom FLOOR((datediff(day)+1)/365.25)
     * (R/claims_elig.R:590-594). */
   def ageYears(dob: Column, asof: Column): Column =
     floor((datediff(asof, dob) + lit(1)) / lit(365.25))
-
-  /** yyyymm INT -> first-of-month DATE
-    * (load_stage.mcaid_elig_timevar.R:89). */
-  def yyyymmToDate(ym: Column): Column =
-    to_date(concat(ym.cast("string"), lit("01")), "yyyyMMdd")
 
   /** DATE -> yyyymm INT (load_table.R:753). */
   def dateToYyyymm(d: Column): Column = year(d) * 100 + month(d)

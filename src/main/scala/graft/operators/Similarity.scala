@@ -151,13 +151,13 @@ object Similarity {
     *
     * Scale: one assignment pass (constant-size centroid literal), one
     * self-join shuffled on the cell id; `maxCell` skips comparison inside
-    * degenerate oversized cells (those docs stay kept), the same
-    * boilerplate-skew guard as Dedup's LSH buckets. The assignment
-    * lineage feeds both the pair join (keyed by cell) and the final
-    * output join (keyed by id) — at corpus scale run [[assignCells]]
-    * once, write the layout (exactly the IVF write-once index step), and
-    * call [[semDedupAssigned]] on the read-back so the corpus is scanned
-    * once, not re-assigned per side.
+    * degenerate oversized cells (those docs stay kept) — Dedup's LSH
+    * bucket self-join and skew guard ([[Dedup.bucketPairs]]) with the
+    * cell as the bucket. The assignment lineage feeds both the pair
+    * join (keyed by cell) and the final output join (keyed by id) — at
+    * corpus scale run [[assignCells]] once, write the layout (exactly the
+    * IVF write-once index step), and call [[semDedupAssigned]] on the
+    * read-back so the corpus is scanned once, not re-assigned per side.
     *
     * @return one row per corpus doc: (id, cell, pruned 0/1) */
   def semDedup(corpus: DataFrame, id: String, vec: String,
@@ -171,20 +171,12 @@ object Similarity {
     * layout). Output columns: (_id, cell, pruned). */
   def semDedupAssigned(assigned: DataFrame, threshold: Double,
       maxCell: Int = 100000): DataFrame = {
-    val a = assigned
-    val capped = a
-      .withColumn("_cn", count(lit(1)).over(Window.partitionBy(col("_cell"))))
-      .filter(col("_cn") <= maxCell).drop("_cn")
-    val l = capped.select(col("_cell"), col("_id").as("a_id"),
-      col("_v").as("a_v"))
-    val r = capped.select(col("_cell"), col("_id").as("b_id"),
-      col("_v").as("b_v"))
-    val pruned = l.join(r, Seq("_cell"))
-      .filter(col("b_id") < col("a_id"))
-      .filter(VectorFns.cosineSim(col("a_v"), col("b_v")) >= threshold)
-      .select(col("a_id").as("_id")).distinct()
+    // the larger id of a close same-cell pair is pruned
+    val pruned = Dedup.bucketPairs(assigned, Seq("_cell"), maxCell, Seq("_v"))
+      .filter(VectorFns.cosineSim(col("_v_b"), col("_v_a")) >= threshold)
+      .select(col("id_b").as("_id")).distinct()
       .withColumn("_pruned", lit(1))
-    a.join(pruned, Seq("_id"), "left")
+    assigned.join(pruned, Seq("_id"), "left")
       .select(col("_id"), col("_cell").as("cell"),
         coalesce(col("_pruned"), lit(0)).as("pruned"))
   }

@@ -39,13 +39,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "ein"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "you3", "wo3", "ta1", "men5"))
 
-  /** Fraction of tokens that are `lang` marker words. */
-  def markerRatio(text: Column, lang: String): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val hits = filter(toks, t => markers(lang).map(lit(_) === t).reduce(_ || _))
-    size(hits).cast("double") / greatest(size(toks), lit(1)).cast("double")
-  }
-
   /** Best-language struct over a pre-tokenized column: ONE pass over the
     * tokens per language, then a single `array_max` argmax. Ties go to the
     * lexicographically-first language via the descending `pref` field

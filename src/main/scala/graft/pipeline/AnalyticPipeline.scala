@@ -31,7 +31,7 @@ import graft.qa.Qa
   *    so the sort is load-bearing, and the tie-break makes the
   *    resulting schedule a pure function of the declared rows.
   *  - [[run]] builds each stage, writes the stage table and QAs the
-  *    WRITTEN table: [[Qa.loadGate]] against the run's metadata log
+  *    WRITTEN table: [[Qa.LoadLog]] against the run's load log
   *    (the metadata.qa_mcaid analog; a fresh run-scoped log, so the
   *    gate has first-load semantics and the verdict is deterministic)
   *    plus the exact-duplicate check (the grain-distinctness QA every
@@ -363,7 +363,7 @@ object AnalyticPipeline {
           // reference QAs stage.<table> in the database, not the query).
           // The row count and the exact-duplicate check FUSE into one
           // aggregation (one scan, one partial-agg shuffle) — a separate
-          // loadGate count plus a distinct().count() job would triple
+          // gate count plus a distinct().count() job would triple
           // the per-stage QA scans (the Qa.fusedTableChecks rule).
           val stageDir = stageDirOf(st.table).toString
           st.build(s, dir).write.parquet(stageDir)

@@ -2,6 +2,7 @@ package graft.qa
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.DateFns
 
 /** The APCD line-level QA batteries (stage/tables/qa_stage.apcd_*.sql)
   * re-expressed at population scale.
@@ -407,7 +408,7 @@ object ApcdLineQa {
           .reduce(_ || _))
 
     // --- demographics ride-along with the capped-age rule
-    val rawAge = floor((datediff(to, col("dob")) + 1) / 365.25)
+    val rawAge = DateFns.ageYears(col("dob"), to)
     val demoExp = demo.select(col("id_apcd"),
       when(rawAge >= 90 || col("ninety_only") === 1, 90)
         .when(rawAge >= 0, rawAge)

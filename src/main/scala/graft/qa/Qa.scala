@@ -70,7 +70,8 @@ object Qa {
     * (qa_stage.mcaid_claim_header.R:150-199; the from-vs-to equality
     * variant is db_loader/scripts_general/qa_load_sql.R:44-66 —
     * qa_sql_row_count's PASS/FAIL note over COUNT_BIG of both sides,
-    * which [[loadGate]]/[[QaCheck]] carry as (observed, expected)). */
+    * which [[QaCheck]] carries as (observed, expected)). The prior is
+    * the caller's; [[LoadLog]] keeps it across a run's loads. */
   def rowCountAtLeast(df: DataFrame, table: String, prior: Long): QaCheck = {
     val n = df.count()
     QaCheck(table, "rowcount_monotonic", n >= prior, n, prior)
@@ -78,77 +79,30 @@ object Qa {
 
   /** Build-to-build monotonicity gate — the pipeline-runner hook
     * (master_mcaid_analytic.R runs qa_stage between loads and logs to
-    * metadata.qa_mcaid): compares this load's row count against the LAST
-    * recorded count for `table` in a persistent parquet log, then appends
-    * this load's row so the next load compares against it. The log row
-    * carries a deterministic load_seq (max prior + 1), not a wall-clock
-    * stamp. First load (no log yet) gates against 0 and passes.
+    * metadata.qa_mcaid), the one implementation of "gate against the
+    * last passing load". A run-scoped IN-MEMORY load log: the reference
+    * records each load with a cheap database INSERT, so a log of ≤13
+    * tiny rows per chain needs no Spark job. [[gate]] compares a load's
+    * row count (computed by the caller, typically inside its fused QA
+    * aggregation) against the LAST PASSING load's count for `table`,
+    * then logs this load; loads are kept in arrival order, so no
+    * wall-clock stamp is needed. First load gates against 0 and passes.
     *
-    * The baseline is the last PASSING load's count — a failed load is
-    * still logged (the audit trail the reference keeps in
-    * metadata.qa_mcaid) but must not become the next baseline, or
+    * A failed load is still logged (the audit trail the reference keeps
+    * in metadata.qa_mcaid) but must not become the next baseline, or
     * re-running the same shrunk load would erode the invariant into a
-    * pass.
-    *
-    * The log is tiny (one row per table per load) — the limit(1) head is
-    * a metadata read, not a data collect. */
-  def loadGate(df: DataFrame, table: String, metaPath: String): QaCheck =
-    loadGateCounted(df.sparkSession, df.count(), table, metaPath)
-
-  /** Run-scoped IN-MEMORY load log — the chain runner's
-    * metadata.qa_mcaid analog. The reference records each load with a
-    * cheap database INSERT; the parquet-append re-expression paid one
-    * full Spark write job plus a log re-read per stage, serialized
-    * under the runner's gate lock (26 driver jobs per 13-stage chain
-    * for what is ≤13 tiny rows of run-local metadata). Semantics are
-    * [[loadGateCounted]]'s exactly: per-table rows, prior = observed
-    * of the highest-seq PASSING load, first load ⇒ prior 0 / seq 1.
-    * Thread-safe — the runner's speculative stage futures gate
+    * pass. Thread-safe — the runner's speculative stage futures gate
     * concurrently. */
   final class LoadLog {
     private val m = scala.collection.mutable.Map
-      .empty[String, Vector[(Boolean, Long, Long)]]
+      .empty[String, Vector[(Boolean, Long)]]
     def gate(n: Long, table: String): QaCheck = synchronized {
       val rows = m.getOrElse(table, Vector.empty)
-      val prior = rows.filter(_._1).sortBy(-_._3).headOption
-        .map(_._2).getOrElse(0L)
-      val seq = if (rows.isEmpty) 1L else rows.map(_._3).max + 1L
+      val prior = rows.findLast(_._1).map(_._2).getOrElse(0L)
       val chk = QaCheck(table, "rowcount_monotonic", n >= prior, n, prior)
-      m(table) = rows :+ ((chk.pass, n, seq))
+      m(table) = rows :+ ((chk.pass, n))
       chk
     }
-  }
-
-  /** [[loadGate]] with the row count supplied by the caller — for
-    * callers that already computed it in a FUSED QA aggregation (the
-    * pipeline runner pays one scan for count + distinctness; a second
-    * full scan here would double the chain's QA cost). */
-  def loadGateCounted(s: SparkSession, n: Long, table: String,
-      metaPath: String): QaCheck = {
-    // first-load means the log path does not EXIST — an existing but
-    // unreadable log (crashed half-append, corrupt footer) must propagate
-    // its read error, not silently reset the baseline to 0
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // ONE collect of the table's own log rows (bounded: one row per
-    // prior load of this table) instead of two ordered limit-1 jobs —
-    // the log scan was the gate's dominant cost in composed chains.
-    val logRows =
-      if (fs.exists(p))
-        s.read.parquet(metaPath).filter(col("table") === table)
-          .select(col("pass"), col("observed"), col("load_seq"))
-          .collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val prior = logRows.filter(_.getBoolean(0))
-      .sortBy(-_.getLong(2)).headOption.map(_.getLong(1)).getOrElse(0L)
-    val seq =
-      if (logRows.isEmpty) 1L else logRows.map(_.getLong(2)).max + 1L
-    val chk = QaCheck(table, "rowcount_monotonic", n >= prior, n, prior)
-    import s.implicits._
-    Seq((chk.table, chk.check, chk.pass, chk.observed, chk.expected, seq))
-      .toDF("table", "check", "pass", "observed", "expected", "load_seq")
-      .write.mode("append").parquet(metaPath)
-    chk
   }
 
   /** Domain invariant: zero rows violating a predicate

@@ -37,7 +37,7 @@ object BuildQueries {
         Qa.refIntegrity(lineitem, "l_orderkey", orders, "o_orderkey", "lineitem"),
         Qa.refIntegrity(orders, "o_custkey", customer, "c_custkey", "orders"),
         Qa.refIntegrity(customer, "c_nationkey", nation, "n_nationkey", "customer"),
-        // prior-load comparison (the loadGate shape, deterministic here:
+        // prior-load comparison (the LoadLog shape, deterministic here:
         // the "prior load" is the pre-1998 archive slice of orders, the
         // "current load" the full table — current must not shrink)
         Qa.rowCountAtLeast(orders, "orders_vs_prior_load",
@@ -4690,8 +4690,8 @@ object BuildQueries {
     * reference (period residence flags incl. the was-here-and-moved OR
     * branch, index-patient requirement, 18th-birthday gate,
     * EXCEPT-backfilled CHR arm with NULL P1 id), then one clinical
-    * export subset to it with the 18+-at-service-date row gate, the
-    * DISTINCT collapse, and dob leaving only as a single-year age. */
+    * export subset to it with the 18+-at-service-date row gate and the
+    * DISTINCT collapse; dob is never exported. */
   def q203StudyExtract(s: SparkSession, dir: String): DataFrame = {
     import graft.builds.StudyExtract
     val orders = t(s, dir, "orders")
@@ -5374,7 +5374,7 @@ object BuildQueries {
     * tables moud/naloxone/preg_episode (master_mcaid_analytic.R:
     * 345-371) — executed in the dependency order
     * AnalyticPipeline.topoOrder derives from the csv-ordered
-    * declarations, each stage load QA-gated (Qa.loadGate +
+    * declarations, each stage load QA-gated (Qa.LoadLog +
     * distinctness); then the mcaid_elig_demo_extra noncisgender
     * UPDATE (:374-392, flag ids from the composed q159 cascade), and
     * the STAGE→FINAL promote loop over the master's fixed 13-table

@@ -35,19 +35,6 @@ object VectorQueries {
         round(col("cosine"), 4).as("cosine"))
       .orderBy(col("query_id"), col("rank"))
 
-  /** IVF ANN (scale path): deterministic k-means-lite cells, nProbe=4 of 8
-    * cells probed per query. Approximate by design -> spec-checked recall
-    * against q40, no SQL oracle. */
-  def q41AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val (assigned, centroids) = Similarity.ivfAssign(
-      t(s, dir, "embeddings"), "vec_id", "embedding", nCells = 8, iters = 2)
-    Similarity.ivfTopK(queries(s, dir), "vec_id", "embedding",
-      assigned, centroids, k = 5, nProbe = 4)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   /** IVF ANN with INTEGER Lloyd (q42) — the full pipeline (init ->
     * 3 Lloyd rounds -> assignment -> probe -> exact-cosine top-k) under
     * a hard SQL oracle: every Lloyd step is integer arithmetic on the

@@ -714,6 +714,4 @@ object IcdcmEnrich {
     s"SELECT ${passThrough.mkString(", ")}, ${filled.mkString(",\n    ")}" +
       s"\n  FROM $src"
   }
-
-  def fillColumnNames: Seq[String] = fillCols
 }

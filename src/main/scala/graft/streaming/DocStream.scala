@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.Dedup
 
 /** Streaming document pipelines — the INGEST-time siblings of the batch
@@ -17,8 +16,9 @@ object DocStream {
     * as the incoming stream, and every incoming doc is checked for a
     * near-duplicate already in the corpus BEFORE admission.
     *
-    * Stream side: the same codegen'd shingle → minhash → banded-bucket
-    * chain as the batch kernel, per microbatch. The static band index
+    * Stream side: the batch kernel's own band keys
+    * ([[graft.operators.Dedup.lshBuckets]], the same codegen'd shingle →
+    * minhash → banded-bucket chain), per microbatch. The static band index
     * is computed once from the corpus and broadcast into a
     * STREAM-STATIC inner join — stateless in Structured Streaming (no
     * watermark, no state store; the static side is re-planned per
@@ -28,8 +28,9 @@ object DocStream {
     * degrades gracefully to a shuffled stream-static join on
     * (band, bucket) — still stateless.
     *
-    * The read-back then verifies candidates EXACTLY (batch): distinct
-    * pairs, true shingle Jaccard, threshold filter — the bloom→exact
+    * The read-back then verifies candidates EXACTLY (batch) through the
+    * batch operators' join-back ([[graft.operators.Dedup.withPayloads]]):
+    * distinct pairs, true shingle Jaccard, threshold filter — the bloom→exact
     * decontam discipline (q210) applied at ingest. Output
     * (id_a, id_b, jaccard) equals q216's from-scratch restriction to
     * stream-corpus pairs, which is what the DuckDB oracle computes.
@@ -46,41 +47,26 @@ object DocStream {
     */
   def nearDupGate(s: SparkSession, dir: String): DataFrame = {
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val corpus = docs.filter(col("doc_id") % 10 === 0)
-    val shingleN = 3; val bands = 8; val rows = 2
-    val k = bands * rows
-    def bandRows(df: DataFrame, idOut: String): DataFrame = {
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("_sig"), b * rows + 1, rows)).as("bh"))
-      }
-      df.select(col("doc_id").as(idOut),
-          Dedup.minhashSignature(
-            Dedup.shingles(col("text"), shingleN), k).as("_sig"))
-        .select(col(idOut), explode(array(bandCols: _*)).as("bk"))
-        .select(col(idOut), col("bk.band").as("band"),
-          col("bk.bh").as("bh"))
-    }
-    val staticIdx = bandRows(corpus, "corpus_id")
+    val sh = docs.select(col("doc_id").as("_id"),
+      Dedup.shingles(col("text"), 3).as("_sh"))
+    def bandRows(df: DataFrame, idOut: String): DataFrame =
+      Dedup.lshBuckets(df.withColumnRenamed("doc_id", idOut), Seq(idOut),
+        Dedup.shingles(col("text"), 3), bands = 8, rows = 2)
+    val staticIdx = bandRows(docs.filter(col("doc_id") % 10 === 0),
+      "corpus_id")
     val stream = EventStream.fileStream(s, s"$dir/documents.parquet")
       .filter(col("doc_id") % 10 =!= 0)
     val hits = bandRows(stream, "in_id")
       .join(broadcast(staticIdx), Seq("band", "bh"))
       .select(col("in_id"), col("corpus_id"))
-    // exact verification of the streamed candidates (batch)
+    // exact verification of the streamed candidates (batch); the filter
+    // reads the ROUNDED Jaccard, the value the oracle thresholds
     val pairs = EventStream.drain(hits)
       .select(least(col("in_id"), col("corpus_id")).as("id_a"),
         greatest(col("in_id"), col("corpus_id")).as("id_b"))
-      .distinct()
-    val sh = docs.select(col("doc_id"),
-      Dedup.shingles(col("text"), shingleN).as("_sh"))
-    pairs
-      .join(sh.select(col("doc_id").as("id_a"), col("_sh").as("_sha")),
-        Seq("id_a"))
-      .join(sh.select(col("doc_id").as("id_b"), col("_sh").as("_shb")),
-        Seq("id_b"))
+    Dedup.withPayloads(pairs, sh, "_sh")
       .select(col("id_a"), col("id_b"),
-        round(Dedup.jaccard(col("_sha"), col("_shb")), 4).as("jaccard"))
+        round(Dedup.jaccard(col("_sh_a"), col("_sh_b")), 4).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
       .orderBy(col("id_a"), col("id_b"))
   }

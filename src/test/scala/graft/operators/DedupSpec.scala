@@ -113,6 +113,40 @@ class DedupSpec extends SparkSpec {
     assert(out == brute)
   }
 
+  test("hot-bucket cap: a bucket of maxBucket rows pairs, one of " +
+    "maxBucket + 1 is dropped") {
+    val s = spark
+    import s.implicits._
+    val maxBucket = 3
+    // ids 0-2 are maxBucket identical docs: every bucket they share holds
+    // exactly maxBucket rows. ids 10-13 are maxBucket + 1 copies of
+    // another doc: every bucket holding them is over the cap.
+    val texts = corpus(2, seed = 29L).map(_._2)
+    val kept = (0L until maxBucket).map(i => (i, texts(0), "src0"))
+    val hot = (10L to 10L + maxBucket).map(i => (i, texts(1), "src0"))
+    val docs = toDf(kept ++ hot)
+    val expected = Set((0L, 1L), (0L, 2L), (1L, 2L))
+    def pairs(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(Dedup.minhashNearDups(docs, "doc_id", "text",
+      maxBucket = maxBucket)) === expected)
+    assert(pairs(Dedup.simhashNearDups(docs, "doc_id", "text",
+      maxBucket = maxBucket)) === expected)
+    assert(pairs(Dedup.winnowOverlapPairs(docs, "doc_id", "text",
+      minShared = 1, maxBucket = maxBucket)) === expected)
+    // semDedup: the cell is the bucket and maxCell the cap. The capped
+    // cell's docs are compared (1 and 2 pruned to 0); the hot cell's
+    // identical vectors are never compared, so all stay kept.
+    val c0 = Seq(1f, 1f, 1f, 1f)
+    val c1 = Seq(-1f, 1f, -1f, 1f)
+    val vecs = (kept.map(d => (d._1, c0)) ++ hot.map(d => (d._1, c1)))
+      .toDF("vec_id", "embedding")
+    val pruned = Similarity.semDedup(vecs, "vec_id", "embedding",
+        Array(0 -> c0, 1 -> c1), threshold = 0.999, maxCell = maxBucket)
+      .filter(col("pruned") === 1).collect().map(_.getLong(0)).toSet
+    assert(pruned === Set(1L, 2L))
+  }
+
   test("ngram jaccard matches in-block brute force, incl. cross-band lengths") {
     val base = corpus(60, seed = 19L)
     // planted A: same length (same band)

@@ -2,7 +2,6 @@ package graft.qa
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.Scratch
 
 /** The fused one-scan QA path must report exactly what the per-check
   * functions report — on data with real defects (dup keys, nulls,
@@ -62,33 +61,23 @@ class QaSpec extends SparkSpec {
     assert(appMap("id") === 3L && appMap("grp") === 2L && appMap("v") === 2L)
   }
 
-  test("loadGate: gates against the last logged load, appends the log") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("qa_gate").toString
-    try {
-      val meta = s"$dir/qa_log"
-      val load1 = Seq(1L, 2L, 3L).toDF("id")
-      val c1 = Qa.loadGate(load1, "t", meta)
-      assert(c1.pass && c1.observed == 3L && c1.expected == 0L)
-      // a grown load passes against the logged 3
-      val c2 = Qa.loadGate(Seq(1L, 2L, 3L, 4L).toDF("id"), "t", meta)
-      assert(c2.pass && c2.observed == 4L && c2.expected == 3L)
-      // a shrunk load FAILS against the logged 4
-      val c3 = Qa.loadGate(Seq(1L).toDF("id"), "t", meta)
-      assert(!c3.pass && c3.observed == 1L && c3.expected == 4L)
-      // the failed load is logged but must NOT reset the baseline:
-      // re-running the identical shrunk load still fails against 4
-      val c4 = Qa.loadGate(Seq(1L).toDF("id"), "t", meta)
-      assert(!c4.pass && c4.observed == 1L && c4.expected == 4L)
-      // the log carries one row per load with increasing load_seq; another
-      // table's loads gate independently
-      val log = s.read.parquet(meta).filter(col("table") === "t")
-        .orderBy("load_seq").collect()
-      assert(log.map(_.getAs[Long]("load_seq")).toSeq == Seq(1L, 2L, 3L, 4L))
-      val other = Qa.loadGate(Seq(9L).toDF("id"), "u", meta)
-      assert(other.pass && other.expected == 0L)
-    } finally Scratch.delete(java.nio.file.Paths.get(dir))
+  test("LoadLog: gates against the last passing load, per table") {
+    val log = new Qa.LoadLog
+    val c1 = log.gate(3L, "t")
+    assert(c1.pass && c1.observed == 3L && c1.expected == 0L)
+    // a grown load passes against the logged 3
+    val c2 = log.gate(4L, "t")
+    assert(c2.pass && c2.observed == 4L && c2.expected == 3L)
+    // a shrunk load FAILS against the logged 4
+    val c3 = log.gate(1L, "t")
+    assert(!c3.pass && c3.observed == 1L && c3.expected == 4L)
+    // the failed load is logged but must NOT reset the baseline:
+    // re-running the identical shrunk load still fails against 4
+    val c4 = log.gate(1L, "t")
+    assert(!c4.pass && c4.observed == 1L && c4.expected == 4L)
+    // another table's loads gate independently
+    val other = log.gate(9L, "u")
+    assert(other.pass && other.expected == 0L)
   }
 
   test("fused checks on an empty frame: distinct passes, minRows fails") {
