@@ -4,7 +4,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, ShiftLeft, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
@@ -75,6 +75,11 @@ object Bloom {
 
   def bloomPositions(item: Column, mBits: Int, k: Int): Column =
     Shim.column(BloomPositions(Shim.expression(item), mBits, k))
+
+  /** The bit of position `pos` within its bitmap word: 1L << (pos mod 64). */
+  def bit(pos: Column): Column =
+    Shim.column(ShiftLeft(Literal(1L),
+      Shim.expression(pos.bitwiseAND(63).cast("int"))))
 
   def bloomContains(bits: Array[Long], item: Column, mBits: Int,
       k: Int): Column = {

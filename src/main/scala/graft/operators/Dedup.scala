@@ -359,20 +359,18 @@ object Dedup {
     * catalog's engine-portable hash; see [[graft.functions.Bloom]]).
     * Returned as packed 64-bit words.
     *
-    * The build is distributed (position explode -> distinct -> per-word
-    * bit_or); only the finished m/64-word bitmap is collected — for the
-    * intended sizing (2^18 bits = 32 KB) that is a constant-size driver
-    * artifact like the IVF centroid literal, not a data collect. */
+    * The build is one distributed aggregation (position explode ->
+    * (word, bit) -> per-word bit_or); `bit_or` is idempotent, so repeated
+    * items and positions need no `distinct`. Only the finished m/64-word
+    * bitmap is collected — for the intended sizing (2^18 bits = 32 KB)
+    * that is a constant-size driver artifact like the IVF centroid
+    * literal, not a data collect. */
   def bloomBits(items: DataFrame, itemCol: Column, mBits: Int,
       k: Int): Array[Long] = {
-    val pos = items
+    val words = items
       .select(explode(Bloom.bloomPositions(itemCol, mBits, k)).as("_pos"))
-      .distinct()
-    val words = pos
-      .select((col("_pos") / 64).cast("int").as("_w"),
-        pmod(col("_pos"), lit(64)).cast("int").as("_b"))
-      .groupBy(col("_w"))
-      .agg(expr("bit_or(shiftleft(cast(1 as bigint), _b))").as("_word"))
+      .groupBy(shiftrightunsigned(col("_pos"), 6).cast("int").as("_w"))
+      .agg(bit_or(Bloom.bit(col("_pos"))).as("_word"))
       .collect()
     val arr = new Array[Long](mBits / 64)
     words.foreach(r => arr(r.getInt(0)) = r.getLong(1))
@@ -410,8 +408,7 @@ object Dedup {
       mBits: Int = 1 << 18, k: Int = 3,
       threshold: Double = 0.3): DataFrame = {
     val bits = bloomBits(
-      bench.select(explode(wordGrams(col(btext), shingleN)).as("_g"))
-        .distinct(),
+      bench.select(explode(wordGrams(col(btext), shingleN)).as("_g")),
       col("_g"), mBits, k)
     corpus
       .filter(col(ctext).isNotNull)

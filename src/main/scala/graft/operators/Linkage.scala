@@ -33,18 +33,19 @@ object Linkage {
       zipAgree: Double, zipDisagree: Double)
 
   /** Agreement vector + score for a candidate frame carrying
-    * `_na/_nb`, `_da/_db`, `_za/_zb` (name/dob/zip per side). */
+    * `_na/_nb`, `_da/_db`, `_za/_zb` (name/dob/zip per side); `extra`
+    * columns are kept between the agreement vector and the score. */
   private def scored(cand: DataFrame, w: FieldWeights, maxNameDist: Int,
-      nearDays: Int): DataFrame = {
+      nearDays: Int, extra: Column*): DataFrame = {
     val nameAgree =
       levenshtein(lower(col("_na")), lower(col("_nb"))) <= maxNameDist
     val dobBand = when(col("_da") === col("_db"), 2)
       .when(abs(datediff(col("_da"), col("_db"))) <= nearDays, 1)
       .otherwise(0)
     val zipAgree = col("_za") === col("_zb")
-    cand.select(col("id_a"), col("id_b"),
+    cand.select(Seq(col("id_a"), col("id_b"),
         nameAgree.as("name_agree"), dobBand.as("dob_band"),
-        zipAgree.as("zip_agree"))
+        zipAgree.as("zip_agree")) ++ extra: _*)
       .withColumn("score",
         when(col("name_agree"), w.nameAgree).otherwise(w.nameDisagree) +
         when(col("dob_band") === 2, w.dobExact)
@@ -57,6 +58,14 @@ object Linkage {
     df.select(col(idCol).as(s"id_$side"),
       col("name").as(s"_n$side"), col("dob").as(s"_d$side"),
       col("zip").as(s"_z$side"))
+
+  /** Candidate (id_a, id_b) pairs with each side's attributes looked up
+    * in `attrs` by id — the one attribute join-back of both candidate
+    * scorers. */
+  private def withAttrs(pairs: DataFrame, attrs: DataFrame,
+      idCol: String): DataFrame =
+    pairs.select("id_a", "id_b").join(sided(attrs, idCol, "a"), Seq("id_a"))
+      .join(sided(attrs, idCol, "b"), Seq("id_b"))
 
   /** Score blocked candidate pairs from two sources carrying
     * (idCol, name, dob DATE, zip). `blockCols` must exist in both: the
@@ -125,12 +134,8 @@ object Linkage {
     * `attrs` (idCol, name, dob, zip) by each side's id. */
   def scoreCandidatePairs(pairs: DataFrame, attrs: DataFrame,
       idCol: String, w: FieldWeights, maxNameDist: Int = 2,
-      nearDays: Int = 90): DataFrame = {
-    val a = sided(attrs, idCol, "a")
-    val b = sided(attrs, idCol, "b")
-    scored(pairs.select("id_a", "id_b").join(a, Seq("id_a"))
-      .join(b, Seq("id_b")), w, maxNameDist, nearDays)
-  }
+      nearDays: Int = 90): DataFrame =
+    scored(withAttrs(pairs, attrs, idCol), w, maxNameDist, nearDays)
 
   /** Value-frequency weight refinement (Winkler): agreement on a RARE
     * name is stronger evidence than on a common one, so an agreeing
@@ -147,32 +152,16 @@ object Linkage {
       nearDays: Int = 90): DataFrame = {
     val freq = attrs.groupBy(lower(col("name")).as("_fn"))
       .agg(count(lit(1)).as("_nf"))
-    val a = sided(attrs, idCol, "a")
-    val b = sided(attrs, idCol, "b")
     // LEFT join (vs inner) so a NULL A-side name keeps its pair row —
     // scored exactly as scoreCandidatePairs scores it — landing in the
     // 'common' bucket (no rarity evidence) instead of being dropped.
-    val cand = pairs.select("id_a", "id_b").join(a, Seq("id_a"))
-      .join(b, Seq("id_b"))
+    val cand = withAttrs(pairs, attrs, idCol)
       .join(freq, lower(col("_na")) === col("_fn"), "left")
-    val nameAgree =
-      levenshtein(lower(col("_na")), lower(col("_nb"))) <= maxNameDist
-    val dobBand = when(col("_da") === col("_db"), 2)
-      .when(abs(datediff(col("_da"), col("_db"))) <= nearDays, 1)
-      .otherwise(0)
-    val zipAgree = col("_za") === col("_zb")
     val bucket = when(col("_nf") <= rareMax, "rare")
       .when(col("_nf") <= uncommonMax, "uncommon")
       .otherwise("common")
-    cand.select(col("id_a"), col("id_b"),
-        nameAgree.as("name_agree"), dobBand.as("dob_band"),
-        zipAgree.as("zip_agree"), bucket.as("freq_bucket"))
-      .withColumn("score",
-        when(col("name_agree"), w.nameAgree).otherwise(w.nameDisagree) +
-        when(col("dob_band") === 2, w.dobExact)
-          .when(col("dob_band") === 1, w.dobNear)
-          .otherwise(w.dobDisagree) +
-        when(col("zip_agree"), w.zipAgree).otherwise(w.zipDisagree) +
+    scored(cand, w, maxNameDist, nearDays, bucket.as("freq_bucket"))
+      .withColumn("score", col("score") +
         when(col("name_agree") && col("freq_bucket") === "rare",
           rareBonus)
         .when(col("name_agree") && col("freq_bucket") === "uncommon",

@@ -2,9 +2,15 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.util.Random
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.operators.Dedup
 
@@ -178,6 +184,33 @@ class WordGramsSpec extends SparkSpec {
         assert(bits.toSeq == scalaBitmap(grams, mBits).toSeq, s"$mode m=$mBits")
       }
     }
+  }
+
+  /** Shuffle exchanges in an executed plan, through adaptive execution's
+    * stage wrappers. */
+  private def exchanges(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case q: QueryStageExec => exchanges(q.plan)
+    case e: ShuffleExchangeLike => 1 + e.children.map(exchanges).sum
+    case other => other.children.map(exchanges).sum
+  }
+
+  test("the bitmap build is one aggregation with one shuffle exchange") {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // bloomDecontaminate is lazy but for its bitmap build, the one action
+      Dedup.bloomDecontaminate(docs, "doc_id", "text",
+        docs.filter(col("doc_id") % 7 === 0), "text", shingleN = N, k = K)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1)
+    assert(exchanges(plans.peek) == 1, plans.peek.toString)
   }
 
   test("(n_grams, n_maybe) match the exploded probe and the md5 replay") {

@@ -1,12 +1,17 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
 import scala.util.Random
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Star-contraction connected components: hand fixtures, a long chain
-  * (the worst case for naive label propagation), random graphs vs a local
-  * union-find, and the wiring onto real minhash near-dup pairs. */
+  * (the worst case for naive label propagation), hand and random graph
+  * shapes vs a local union-find, a Spark-job budget for a graph that
+  * converges in one round, and the wiring onto real minhash near-dup
+  * pairs. */
 class ComponentsSpec extends SparkSpec {
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -62,6 +67,63 @@ class ComponentsSpec extends SparkSpec {
       val got = cc(edges)
       assert(got == unionFind(edges), s"seed $seed")
     }
+  }
+
+  test("maxIter bounds the rounds: the 128-chain does not fit in one") {
+    val s = spark
+    import s.implicits._
+    val chain = (1L until 128L).map(i => (i + 1, i)).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      Components.connectedComponents(chain, "src", "dst", maxIter = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+  }
+
+  test("graph shapes match a local union-find") {
+    val star = (1L until 20L).map(i => (20L, i)) // the hub has the largest id
+    val k8 = for (a <- 1L to 8L; b <- 1L to 8L if a < b) yield (a, b)
+    // complete binary tree over 63 nodes, numbered in reverse BFS order:
+    // the root is 63 and every parent is larger than its children
+    val tree = (2 to 63).map(i => ((64 - i).toLong, (64 - i / 2).toLong))
+    val shapes = Seq(
+      "duplicate and reversed edges" -> Seq[(Long, Long)]((1L, 2L), (2L, 1L),
+        (1L, 2L), (3L, 2L), (2L, 3L), (3L, 2L), (7L, 9L), (9L, 7L), (9L, 7L)),
+      "star with the hub largest" -> star,
+      "K8" -> k8,
+      "reverse-BFS binary tree" -> tree) ++
+      (1 to 5).map { seed =>
+        val rng = new Random(100 + seed)
+        s"dense random seed $seed" -> Seq.fill(150)(
+          (rng.nextInt(60).toLong, rng.nextInt(60).toLong))
+          .filter { case (a, b) => a != b }
+      }
+    for ((name, edges) <- shapes)
+      assert(cc(edges) == unionFind(edges), name)
+  }
+
+  test("a graph that converges in one round runs at most 6 Spark jobs") {
+    // near-dup shaped: 200 disjoint pairs and triangles, a star forest
+    // after one round; the call and the collect of its labels are counted
+    val edges = (0L until 200L).flatMap { c =>
+      val b = c * 10
+      if (c % 2 == 0) Seq((b, b + 1))
+      else Seq((b, b + 1), (b + 1, b + 2), (b + 2, b))
+    }
+    val group = "components-job-budget"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "connectedComponents job budget")
+      val got = try cc(edges) finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      assert(got == unionFind(edges))
+      assert(jobs.get > 0 && jobs.get <= 6, s"${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("self-loop-only input yields an empty label frame") {
