@@ -92,11 +92,15 @@ object ApcdInjury {
     * causeRef: (icdcm, icdcm_version, intent, mechanism) prefix codes.
     * ccsRef: (icdcm, icdcm_version, ccs_detail_desc) exact codes. */
   def build(dx: DataFrame, causeRef: DataFrame, ccsRef: DataFrame): DataFrame = {
-    // 9a: classification vocabulary
-    val vocab = dx.select(col("icdcm_norm"), col("icdcm_version")).distinct()
+    // 9a: classification vocabulary, carrying 9b's inclusion test as an
+    // aggregate output: the optimizer cannot push that into the dx scan,
+    // where each of the test's ~20 uses of the code would inline the
+    // caller's expression for it (a method over the JVM's 64 KB limit)
+    val vocab = dx.groupBy(col("icdcm_norm"), col("icdcm_version"))
+      .agg(max(cdcNatureInclusion(col("icdcm_norm"), col("icdcm_version")))
+        .as("cdc_nature"))
     // 9b: nature vocabulary
-    val natureVocab = vocab
-      .filter(cdcNatureInclusion(col("icdcm_norm"), col("icdcm_version")))
+    val natureVocab = vocab.filter(col("cdc_nature")).drop("cdc_nature")
     // 9c: nature rows
     val nature = dx
       .join(natureVocab, Seq("icdcm_norm", "icdcm_version"))

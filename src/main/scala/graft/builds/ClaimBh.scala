@@ -4,49 +4,31 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Intervals
 
-/** claim_bh — the behavioral-health condition-span build: three per-source
-  * person-month frames (diagnosis, pharmacy, procedure evidence) FULL OUTER
-  * joined with coalesced keys (claim_bh.R:232-309), then per-person
-  * contiguous evidence months collapsed to condition episodes with
-  * min/max dates and per-source totals (claim_bh.R:193-202).
+/** claim_bh — the behavioral-health condition-span build: one person-month
+  * evidence frame carrying the diagnosis, pharmacy and procedure counts
+  * side by side (the reference FULL OUTER joins three per-source frames
+  * with coalesced keys, claim_bh.R:232-309), then per-person contiguous
+  * evidence months collapsed to condition episodes with min/max dates and
+  * per-source totals (claim_bh.R:193-202).
   *
-  * Scale: the two full-outer joins shuffle on (id, month-index) — person-
-  * month grain, already aggregated, so volume is bounded by active person-
-  * months, not claims; the episode islands reuse one (id)-partitioned
-  * window pass (arithmetic islands — no lag chain).
+  * A caller reading one claims table builds the frame with one
+  * conditional aggregation per (id, month); a caller with three separate
+  * source tables unions them by name (missing counts as 0) and sums them
+  * in one groupBy. Either way there is no outer join.
+  *
+  * Scale: the frame is at person-month grain, so volume is bounded by
+  * active person-months, not claims; the episode islands reuse one
+  * (id)-partitioned window pass (arithmetic islands — no lag chain).
   */
 object ClaimBh {
 
-  /** @param dx (id, mi, n_dx) person-month diagnosis evidence
-    * @param rx (id, mi, n_rx) person-month pharmacy evidence
-    * @param px (id, mi, n_px) person-month procedure evidence
-    *           where `mi` is a dense month index (year*12 + month).
+  /** @param evidence (id, mi, n_dx, n_rx, n_px): one row per person-month
+    *        with at least one non-zero count, where `mi` is a dense month
+    *        index (year*12 + month).
     * @return one row per (person, episode): month span, per-source claim
     *         totals, and a multi-source confirmation flag. */
-  def build(dx: DataFrame, rx: DataFrame, px: DataFrame): DataFrame = {
-    val a = dx.alias("a")
-    val b = rx.alias("b")
-    val j1 = a.join(b,
-        col("a.id") === col("b.id") && col("a.mi") === col("b.mi"), "full")
-      .select(
-        coalesce(col("a.id"), col("b.id")).as("id"),
-        coalesce(col("a.mi"), col("b.mi")).as("mi"),
-        coalesce(col("a.n_dx"), lit(0L)).as("n_dx"),
-        coalesce(col("b.n_rx"), lit(0L)).as("n_rx"))
-      .alias("j")
-    val c = px.alias("c")
-    val merged = j1.join(c,
-        col("j.id") === col("c.id") && col("j.mi") === col("c.mi"), "full")
-      .select(
-        coalesce(col("j.id"), col("c.id")).as("id"),
-        coalesce(col("j.mi"), col("c.mi")).as("mi"),
-        coalesce(col("j.n_dx"), lit(0L)).as("n_dx"),
-        coalesce(col("j.n_rx"), lit(0L)).as("n_rx"),
-        coalesce(col("c.n_px"), lit(0L)).as("n_px"))
-
-    // contiguous evidence months -> episodes (arithmetic islands on the
-    // dense month index; same-key rows are unique post-join)
-    Intervals.islandKeyByStep(merged, Seq("id"), "mi")
+  def build(evidence: DataFrame): DataFrame =
+    Intervals.islandKeyByStep(evidence, Seq("id"), "mi")
       .groupBy(col("id"), col("island_id"))
       .agg(
         min(col("mi")).as("from_mi"),
@@ -59,5 +41,4 @@ object ClaimBh {
         ((col("n_dx") > 0).cast("int") + (col("n_rx") > 0).cast("int") +
           (col("n_px") > 0).cast("int")) >= 2)
       .drop("island_id")
-  }
 }

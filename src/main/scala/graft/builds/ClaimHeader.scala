@@ -11,45 +11,35 @@ import org.apache.spark.sql.functions._
   *  step 1  line -> header conditional-aggregation flag rollups
   *          (ed_rev_code / MAX(CASE) — :240-263)
   *  step 2  HEDIS-style EXCEPT membership: qualifying keys minus
-  *          disqualifying keys (inpatient rev EXCEPT nonacute — :321-354)
-  *  step 3  primary-line extraction via ranked selection within claim
-  *          (first e-code / ROW_NUMBER — :601-614)
+  *          disqualifying keys (inpatient rev EXCEPT nonacute — :321-354),
+  *          as "some line qualifies and no line disqualifies"
+  *  step 3  primary-line extraction (first e-code / ROW_NUMBER — :601-614)
+  *          as the max of a (price, -line number, part) struct: highest
+  *          price, the lower line number on a tie
   *  step 4  Yale-ED episode construction: per-person 1-day merge via
   *          lag + running sum (:814-879), with episode identity as the
   *          (person, episode_seq) composite — never a global DENSE_RANK
   *          (SURVEY §7.5.1)
   *
-  * Scale: steps 1-3 are partial-agg / window shuffles keyed on the claim
-  * id; step 4 re-keys once on the person id. The EXCEPT sides are key-only
-  * projections (no payload shuffle).
+  * Scale: steps 1-3 are one partial aggregation keyed on the claim id, so
+  * lineitem is read once and joined once; step 4 re-keys once on the
+  * person id.
   */
 object ClaimHeader {
 
   def build(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    // step 1: line rollups + flags
-    val lineAgg = lineitem.groupBy(col("l_orderkey"))
+    // steps 1-3: one pass over the lines per claim
+    val lines = lineitem.groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_lines"),
         round(sum(col("l_extendedprice")), 2).as("sum_price"),
         max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("has_return"),
-        max(when(col("l_discount") >= 0.08, 1).otherwise(0)).as("has_deep_discount"))
-
-    // step 2: EXCEPT membership (qualify minus disqualify, key-only sets)
-    val qualify = lineitem.filter(col("l_quantity") >= 45)
-      .select(col("l_orderkey"))
-    val disqualify = lineitem.filter(col("l_discount") >= 0.09)
-      .select(col("l_orderkey"))
-    val inpatient = qualify.except(disqualify)
-      .withColumnRenamed("l_orderkey", "ip_key")
-
-    // step 3: primary line (highest price, line number tie-break)
-    val wLine = Window.partitionBy(col("l_orderkey"))
-      .orderBy(col("l_extendedprice").desc, col("l_linenumber"))
-    val primary = lineitem
-      .withColumn("rn", row_number().over(wLine))
-      .filter(col("rn") === 1)
-      .select(col("l_orderkey").as("p_key"),
-        col("l_partkey").as("primary_partkey"),
-        round(col("l_extendedprice"), 2).as("primary_price"))
+        max(when(col("l_discount") >= 0.08, 1).otherwise(0)).as("has_deep_discount"),
+        (max(col("l_quantity") >= 45) &&
+          !coalesce(max(col("l_discount") >= 0.09), lit(false)))
+          .as("inpatient"),
+        max(struct(col("l_extendedprice").as("price"),
+          (-col("l_linenumber")).as("neg_line"),
+          col("l_partkey").as("partkey"))).as("primary"))
 
     // step 4: per-person episode merge (1-day gap)
     val wPerson = Window.partitionBy(col("o_custkey"))
@@ -64,16 +54,15 @@ object ClaimHeader {
       .withColumn("episode_seq", sum(col("is_start")).over(run))
 
     headers
-      .join(lineAgg, col("o_orderkey") === col("l_orderkey"), "left")
-      .join(primary, col("o_orderkey") === col("p_key"), "left")
-      .join(inpatient, col("o_orderkey") === col("ip_key"), "left")
+      .join(lines, col("o_orderkey") === col("l_orderkey"), "left")
       .select(col("o_orderkey"), col("o_custkey"), col("order_date"),
         coalesce(col("n_lines"), lit(0L)).as("n_lines"),
         coalesce(col("sum_price"), lit(0.0)).as("sum_price"),
         coalesce(col("has_return"), lit(0)).as("has_return"),
         coalesce(col("has_deep_discount"), lit(0)).as("has_deep_discount"),
-        when(col("ip_key").isNotNull, 1).otherwise(0).as("is_inpatient"),
-        col("primary_partkey"), col("primary_price"),
+        when(col("inpatient"), 1).otherwise(0).as("is_inpatient"),
+        col("primary.partkey").as("primary_partkey"),
+        round(col("primary.price"), 2).as("primary_price"),
         col("episode_seq"))
   }
 }

@@ -17,7 +17,9 @@ import graft.functions.DateFns
   *    value asc),
   *  - the most-recent observed value (gender_recent idiom, :172-181).
   *
-  * One groupBy shuffle per variable family, all keyed on the entity id.
+  * The ever flags and the "_t" variables come from one aggregation of
+  * the entity's periods; the modal and most-recent picks are one groupBy
+  * shuffle each, all keyed on the entity id.
   */
 object EligDemo {
 
@@ -29,18 +31,18 @@ object EligDemo {
       col("props"), DateFns.dateToYyyymm(col("ts")).as("ym"),
       to_date(col("ts")).as("day"))
 
-    // ever flags + per-period pct staging in one pass
+    // per-period flags, then ever flags + pcts in one per-entity pass
+    // (an entity ever had the flag iff one of its periods did)
     val daily = ev.groupBy(col("user_id"), col("day"))
       .agg(
         max(when(col("event_type") === "purchase", 1).otherwise(0)).as("d_purchase"),
         max(when(col("event_type") === "error", 1).otherwise(0)).as("d_error"))
     val pcts = daily.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_days"),
+        max(col("d_purchase")).as("purchase_ever"),
+        max(col("d_error")).as("error_ever"),
         round(sum(col("d_purchase")) * 100.0 / count(lit(1)), 1).as("purchase_pct_t"),
         round(sum(col("d_error")) * 100.0 / count(lit(1)), 1).as("error_pct_t"))
-    val evers = ev.groupBy(col("user_id"))
-      .agg(max(when(col("event_type") === "purchase", 1).otherwise(0)).as("purchase_ever"),
-        max(when(col("event_type") === "error", 1).otherwise(0)).as("error_ever"))
 
     // modal props: count desc, latest-observed-month desc, value asc
     val modal = WeightedMode.mode(ev, Seq("user_id"), "props", "modal_props",
@@ -51,8 +53,7 @@ object EligDemo {
       ev.select(col("user_id"), col("event_type"), col("ts")),
       Seq("user_id"), "event_type", "ts", "recent_type")
 
-    pcts.join(evers, Seq("user_id"))
-      .join(modal, Seq("user_id"), "left")
+    pcts.join(modal, Seq("user_id"), "left")
       .join(recent, Seq("user_id"), "left")
       .select(col("user_id"), col("n_days"),
         col("purchase_ever"), col("error_ever"),

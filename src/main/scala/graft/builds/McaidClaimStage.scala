@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   *
   *  - `date_truncate` = MIN(date_var) of the incoming batch (:45-48);
   *  - archive rows strictly BEFORE the truncate date are kept as-is;
-  *  - incoming rows on/after it are SELECT DISTINCTed with the derived
-  *    columns: `clndr_year_mnth` = YEAR*100 + MONTH of the first
-  *    service date, and `clm_line` = the last 3 digits of the line TCN
-  *    cast to int (:113-117);
+  *  - incoming rows on/after it (every row with a date, since the MIN
+  *    is taken over the batch itself) get the derived columns:
+  *    `clndr_year_mnth` = YEAR*100 + MONTH of the first service date,
+  *    and `clm_line` = the last 3 digits of the line TCN cast to int
+  *    (:113-117);
   *  - the two branches combine under UNION (distinct), so a row present
-  *    in both the archive tail and the re-delivered batch lands once.
+  *    in both the archive tail and the re-delivered batch, or delivered
+  *    twice in the batch, lands once.
   *
   * Spark-first notes: the scalar MIN is a 1-row aggregate CROSS-JOINed
   * (broadcast) onto the archive scan instead of a driver round-trip, so
@@ -42,11 +44,8 @@ object McaidClaimStage {
       .filter(col(dateVar) < col("date_truncate") ||
         col("date_truncate").isNull)
       .drop("date_truncate")
-    // incoming keeps only rows on/after the truncate date
-    val fresh = incoming
-      .crossJoin(broadcast(cut))
-      .filter(col(dateVar) >= col("date_truncate"))
-      .drop("date_truncate")
+    // incoming rows on/after the truncate date: all those with a date
+    val fresh = incoming.filter(col(dateVar).isNotNull)
     val idCols = Set("mbr_h_sid", "medicaid_recipient_id",
       "baby_on_mom_ind", "tcn", "clm_line_tcn")
     val freshCols = Seq(
@@ -57,7 +56,7 @@ object McaidClaimStage {
       substring(col("clm_line_tcn"), -3, 3).cast("int")
         .as("clm_line")) ++
       fresh.columns.filterNot(idCols.contains).map(col)
-    val freshDerived = fresh.select(freshCols: _*).distinct()
+    val freshDerived = fresh.select(freshCols: _*)
     kept.select(freshDerived.columns.map(col): _*)
       .union(freshDerived).distinct()
   }

@@ -3707,9 +3707,9 @@ object BuildQueries {
   /** §2.1 master Medicaid claim-line staging load (q169,
     * load_stage.mcaid_claim.R:104-127 incremental path): archive rows
     * strictly before the incoming batch's MIN service date, the
-    * re-delivered batch DISTINCTed with the derived clndr_year_mnth and
+    * re-delivered batch with the derived clndr_year_mnth and
     * right-3-of-TCN clm_line columns, combined under UNION distinct.
-    * The 1996 order-year overlap plants rows present in BOTH branches,
+    * The 1996 order-year overlap plants rows present in BOTH inputs,
     * and a re-delivered duplicate sliver exercises the DISTINCT. */
   def q169McaidClaimStage(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").join(t(s, dir, "orders"),

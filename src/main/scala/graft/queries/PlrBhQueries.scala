@@ -6,7 +6,7 @@ import graft.builds.{ClaimBh, EligPlr}
 import graft.queries.Q.t
 
 /** SURVEY §7.2 phase-4 catalog: the elig_plr per-person-per-year coverage
-  * rollup and the claim_bh full-outer condition-span build on the
+  * rollup and the claim_bh condition-span build on the
   * orders/lineitem claims analog. */
 object PlrBhQueries {
 
@@ -32,24 +32,23 @@ object PlrBhQueries {
         yearFrom = "1996-01-01", yearTo = "1996-12-31")
       .orderBy(col("id"))
 
-  /** §2.3/§2.4 claim_bh: three person-month evidence frames (dx from
-    * returned lines, rx from deep-discount lines, px from bulk lines) FULL
-    * OUTER joined with coalesced keys, then contiguous evidence months
-    * collapsed to episodes (claim_bh.R:232-309, 193-202); rolled up per
-    * person so the result is one row per person with episode stats. */
+  /** §2.3/§2.4 claim_bh: person-month evidence counts (dx from returned
+    * lines, rx from deep-discount lines, px from bulk lines) in one
+    * conditional aggregation — the reference's three per-source frames
+    * FULL OUTER joined with coalesced keys (claim_bh.R:232-309) — then
+    * contiguous evidence months collapsed to episodes (claim_bh.R:193-202);
+    * rolled up per person so the result is one row per person with
+    * episode stats. */
   def q83ClaimBh(s: SparkSession, dir: String): DataFrame = {
-    val ol = t(s, dir, "lineitem")
+    val evidence = t(s, dir, "lineitem")
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("id"),
-        (year(col("l_shipdate")) * 12 + month(col("l_shipdate")) - 1).as("mi"),
-        col("l_returnflag"), col("l_discount"), col("l_quantity"))
-    val dx = ol.filter(col("l_returnflag") === "R")
-      .groupBy(col("id"), col("mi")).agg(count(lit(1)).as("n_dx"))
-    val rx = ol.filter(col("l_discount") >= 0.08)
-      .groupBy(col("id"), col("mi")).agg(count(lit(1)).as("n_rx"))
-    val px = ol.filter(col("l_quantity") >= 45)
-      .groupBy(col("id"), col("mi")).agg(count(lit(1)).as("n_px"))
-    ClaimBh.build(dx, rx, px)
+      .groupBy(col("o_custkey").as("id"),
+        (year(col("l_shipdate")) * 12 + month(col("l_shipdate")) - 1).as("mi"))
+      .agg(count(when(col("l_returnflag") === "R", 1)).as("n_dx"),
+        count(when(col("l_discount") >= 0.08, 1)).as("n_rx"),
+        count(when(col("l_quantity") >= 45, 1)).as("n_px"))
+      .filter(col("n_dx") + col("n_rx") + col("n_px") > 0)
+    ClaimBh.build(evidence)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_episodes"),
         sum(col("n_months")).as("evidence_months"),

@@ -79,7 +79,7 @@ class PlanSpec extends SparkSpec {
       "q46_interval_collapse" -> 3, // distinct(id,day) + hash(id) + sort
       "q49_claims_elig" -> 9,       // intervals + melt + pivot + joins
       "q64_elig_timevar" -> 5,
-      "q66_claim_header" -> 9,
+      "q66_claim_header" -> 4, // line rollup, person window, join, sort
       "q68_elig_month" -> 4,
       "q60_perf_measures" -> 6, // one window pass + stack for all measures
       "q61_condition_loop" -> 3, // one scan + one shuffle for all configs
@@ -243,14 +243,29 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, s"unintended cross joins: $offenders")
   }
 
+  /** Joins, and scans per input file, in a DataFrame's optimized plan. */
+  private def joinsAndScans(df: org.apache.spark.sql.DataFrame)
+      : (Int, Map[String, Int]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val optimized = df.queryExecution.optimizedPlan
+    val joins = optimized.collect { case j: Join => j }.size
+    val scans = optimized.collectLeaves().collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation =>
+          h.location.rootPaths.head.getName.stripSuffix(".parquet")
+        case other => other.toString
+      }
+    }.groupBy(identity).view.mapValues(_.size).toMap
+    (joins, scans)
+  }
+
   test("q159 flag cascade plans a bounded number of joins and scans") {
     // Each DataFrame val is inlined at every use, so a set-algebra
     // cascade of semi/anti joins duplicates its input subtrees once per
     // use. Over one parquet relation per input, the aggregation shape
     // reads icdcm and demo twice, the others once, with three joins.
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-      LogicalRelation}
     val s = spark
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("q159_plan")
@@ -269,20 +284,57 @@ class PlanSpec extends SparkSpec {
       val ndcRef = rel("ndcref", Seq(("n1", "ESTRADIOL", "TABLET", "1", "MG"))
         .toDF("ndc", "nonproprietaryname", "dosageformname",
           "active_numerator_strength", "active_ingred_unit"))
-      val optimized = graft.builds.EligDemoExtra
-        .build(icdcm, proc, pharm, demo, ndcRef).queryExecution.optimizedPlan
-      val joins = optimized.collect { case j: Join => j }.size
-      val scans = optimized.collectLeaves().collect {
-        case l: LogicalRelation => l.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.head.getName
-          case other => other.toString
-        }
-      }.groupBy(identity).view.mapValues(_.size).toMap
-      assert(joins <= 6, s"$joins joins:\n$optimized")
+      val (joins, scans) = joinsAndScans(graft.builds.EligDemoExtra
+        .build(icdcm, proc, pharm, demo, ndcRef))
+      assert(joins <= 6, s"$joins joins")
       assert(scans.keySet === Set("icdcm", "proc", "pharm", "demo", "ndcref"),
         s"inputs lost or unrecognised: $scans")
       assert(scans.values.forall(_ <= 2), s"inputs re-scanned: $scans")
     } finally Scratch.delete(root)
+  }
+
+  test("mcaid chain builds plan within their join and raw-scan budgets") {
+    // Same hazard as q159, over the raw sf tables: a build that derives
+    // an input in several branches reads it once per branch. Budgets
+    // are the current (joins, scans per raw input) of each stage build
+    // and of the update's flag build, plus the chain's total raw scans;
+    // tightening is fine, loosening needs a reason in the diff.
+    import graft.pipeline.AnalyticPipeline.{mcaidChain, mcaidEligDemoExtra}
+    val budgets: Map[String, (Int, Map[String, Int])] = Map(
+      "mcaid_claim_bh" -> (1, Map("lineitem" -> 1, "orders" -> 1)),
+      "mcaid_claim_ccw" -> (0, Map("orders" -> 1)),
+      "mcaid_claim_header" -> (1, Map("lineitem" -> 1, "orders" -> 1)),
+      "mcaid_claim_icdcm_header" -> (0, Map("orders" -> 1)),
+      // lineitem ⋈ orders once for the archive, twice for the incoming
+      // batch (it unions a re-delivered sliver) and twice for its MIN
+      "mcaid_claim_line" -> (6, Map("lineitem" -> 5, "orders" -> 5)),
+      "mcaid_claim_moud" -> (1, Map("lineitem" -> 1, "orders" -> 2)),
+      // separate pharmacy and procedure sources by design
+      "mcaid_claim_naloxone" -> (7, Map("lineitem" -> 3, "orders" -> 3)),
+      "mcaid_claim_pharm" -> (0, Map("lineitem" -> 1)),
+      "mcaid_claim_preg_episode" -> (0, Map("orders" -> 1)),
+      "mcaid_claim_procedure" -> (0, Map("orders" -> 2)),
+      // periods, modal and most-recent: three groupings of the events
+      "mcaid_elig_demo" -> (2, Map("events" -> 3)),
+      "mcaid_elig_month" -> (0, Map("orders" -> 1)),
+      "mcaid_elig_timevar" -> (0, Map("events" -> 1)),
+      // the q159 fixtures: five distinct claims sources by design
+      "mcaid_elig_demo_extra.flags" ->
+        (7, Map("lineitem" -> 4, "orders" -> 4, "customer" -> 2)))
+    val builds = mcaidChain.map(st => st.table -> st.build) :+
+      ("mcaid_elig_demo_extra.flags" -> mcaidEligDemoExtra.flags)
+    val got = builds.map { case (name, build) =>
+      name -> joinsAndScans(build(spark, sf))
+    }.toMap
+    val over = got.collect {
+      case (name, (joins, scans)) if !budgets.get(name).exists {
+          case (j, sc) => joins <= j && scans.keySet == sc.keySet &&
+            scans.forall { case (in, n) => n <= sc(in) } } =>
+        s"$name -> ($joins, $scans)"
+    }
+    assert(over.isEmpty, s"over budget:\n${over.toSeq.sorted.mkString("\n")}")
+    val total = got.values.map(_._2.values.sum).sum
+    assert(total <= 44, s"$total raw-input scans across the chain")
   }
 
   test("q207 probes corpus grams in one kernel: no explode, no lambda") {
