@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Intervals, WeightedMode}
+import graft.functions.DateFns
 
 /** The reference's primary user entry point re-composed end-to-end
   * (R/claims_elig.R:159-1452): a parameterized cohort query over an
@@ -53,8 +54,7 @@ object ClaimsElig {
   def cohort(events: DataFrame, p: EligParams): DataFrame = {
     val winFrom = to_date(lit(p.fromDate))
     val winTo = to_date(lit(p.toDate))
-    val duration = events.sparkSession.range(1)
-      .select(datediff(winTo, winFrom) + 1).head().getInt(0)
+    val duration = DateFns.windowDays(p.fromDate, p.toDate)
 
     // 1. activity days -> contiguous intervals (elig_timevar kernel)
     val days = events

@@ -67,7 +67,7 @@ object McaidCohort {
     * column-valued delimited strings. Same skip rule as [[splitCsv]]. */
   def splitItems(c: Column, delim: String): Column =
     filter(split(c, java.util.regex.Pattern.quote(delim), -1),
-      s => length(rtrim(s, " ")) > 0)
+      s => length(rtrim(s)) > 0)
 
   /** dbo.CSVToTable (analysis/Broad use functions/
     * csvtotable_function.sql:12-30) — the OTHER broad-use list-split,
@@ -137,10 +137,7 @@ object McaidCohort {
              hraRegion: DataFrame, p: CohortParams): DataFrame = {
     val wFrom = lit(p.fromDate).cast("date")
     val wTo = lit(p.toDate).cast("date")
-    val durDays = // @duration: inclusive window length, a plan-time int
-      java.time.temporal.ChronoUnit.DAYS.between(
-        java.time.LocalDate.parse(p.fromDate),
-        java.time.LocalDate.parse(p.toDate)).toInt + 1
+    val durDays = DateFns.windowDays(p.fromDate, p.toDate) // @duration
 
     val ids = idsInWindow(eligOverall, p)
 
@@ -153,14 +150,7 @@ object McaidCohort {
     val demo = demoever
       .join(ids, "id")                 // the EXISTS (##id) gate
       .withColumn("age", age.cast("int"))
-      .withColumn("age_grp7",
-        when(col("age") >= 0 && col("age") < 5, "0-4")
-          .when(col("age") >= 5 && col("age") < 12, "5-11")
-          .when(col("age") >= 12 && col("age") < 18, "12-17")
-          .when(col("age") >= 18 && col("age") < 25, "18-24")
-          .when(col("age") >= 25 && col("age") < 45, "25-44")
-          .when(col("age") >= 45 && col("age") < 65, "45-64")
-          .when(col("age") >= 65, "65 and over"))
+      .withColumn("age_grp7", DateFns.ageGrp7(col("age")))
       .distinct()
       .filter(col("age") >= p.ageMin && col("age") <= p.ageMax &&
         flagPred && csvIn(col("maxlang"), p.maxlang))

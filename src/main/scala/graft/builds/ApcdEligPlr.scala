@@ -159,19 +159,10 @@ object ApcdEligPlr {
       col("race_eth_recent"), col("race_recent"), col("race_aian"),
       col("race_asian"), col("race_black"), col("race_latino"),
       col("race_nhpi"), col("race_white"), col("race_unknown"),
-      col("ninety_only"),
       when(rawAge >= 90 || col("ninety_only") === 1, 90)
         .when(rawAge >= 0, rawAge)
         .when(rawAge === -1, 0).as("age"))
-    val aged = demoAged.withColumn("age_grp7",
-      when(col("age") >= 0 && col("age") < 5, "0-4")
-        .when(col("age") >= 5 && col("age") < 12, "5-11")
-        .when(col("age") >= 12 && col("age") < 18, "12-17")
-        .when(col("age") >= 18 && col("age") < 25, "18-24")
-        .when(col("age") >= 25 && col("age") < 45, "25-44")
-        .when(col("age") >= 45 && col("age") < 65, "45-64")
-        .when(col("age") >= 65 || col("ninety_only") === 1,
-          "65 and over"))
+    val aged = demoAged.withColumn("age_grp7", DateFns.ageGrp7(col("age")))
 
     val merged = cov2
       .join(geo, Seq("id"), "left")

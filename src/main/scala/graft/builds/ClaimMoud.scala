@@ -28,11 +28,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference computes the per-(person, quarter) median gap with
   * `percentile_cont(0.5) WITHIN GROUP ... OVER (PARTITION BY ...)` —
-  * T-SQL's windowed ordered-set aggregate, which Spark does not have.
-  * Re-expression: `sort_array(collect_list(gap))` over the same window
-  * (quarter partitions are bounded at ~92 service days, so the per-row
-  * array is small) and interpolate the median from the sorted array —
-  * ONE window pass, no groupBy-plus-join-back re-reading the lineage.
+  * T-SQL's windowed ordered-set aggregate. Spark's `median` is the same
+  * linear-interpolated percentile and runs over the same window: ONE
+  * window pass, no groupBy-plus-join-back re-reading the lineage. On
+  * integer gaps its `0.5·a + 0.5·b` equals `(a + b) / 2` exactly.
   */
 object ClaimMoud {
 
@@ -115,20 +114,9 @@ object ClaimMoud {
         "bup_rx_flag", "_is_proc")
   }
 
-  /** Linear-interpolated median of a SORTED double array (percentile_cont
-    * 0.5 semantics); null on empty. */
-  private def arrayMedian(sorted: Column): Column = {
-    val n = size(sorted)
-    when(n === 0, lit(null).cast("double"))
-      .when(n % 2 === 1,
-        element_at(sorted, ((n + 1) / 2).cast("int")).cast("double"))
-      .otherwise((element_at(sorted, (n / 2).cast("int")) +
-        element_at(sorted, (n / 2 + 1).cast("int"))).cast("double") / 2.0)
-  }
-
   /** STEP 8 over the per-(person, day) rollup: next-methadone-date gap,
-    * person-quarter median gap (windowed ordered-set aggregate re-
-    * expressed as a sorted collect_list), and the exception rules. */
+    * person-quarter median gap (a windowed `median`), and the exception
+    * rules. */
   def methDaysSupply(daily: DataFrame): DataFrame = {
     val q = concat(year(col("service_date")).cast("string"),
       lit("_"), quarter(col("service_date")).cast("string"))
@@ -145,8 +133,7 @@ object ClaimMoud {
       .withColumn("meth_sum_quarter",
         sum(col("meth_proc_flag")).over(wq))
     val withMedian = withNext.withColumn("median_gap_quarter",
-      arrayMedian(sort_array(collect_list(
-        col("next_meth_diff").cast("double")).over(wq))))
+      median(col("next_meth_diff")).over(wq))
     withMedian.withColumn("moud_days_supply_new",
       when(col("meth_proc_flag") === 1 && col("meth_sum_quarter") <= 2,
         col("moud_days_supply").cast("double"))

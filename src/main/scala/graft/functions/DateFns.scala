@@ -17,6 +17,23 @@ object DateFns {
   def ageYears(dob: Column, asof: Column): Column =
     floor((datediff(asof, dob) + lit(1)) / lit(365.25))
 
+  /** The reference's seven-level age group over the T-SQL age; NULL for
+    * a NULL or negative age. */
+  def ageGrp7(age: Column): Column =
+    when(age >= 0 && age < 5, "0-4")
+      .when(age >= 5 && age < 12, "5-11")
+      .when(age >= 12 && age < 18, "12-17")
+      .when(age >= 18 && age < 25, "18-24")
+      .when(age >= 25 && age < 45, "25-44")
+      .when(age >= 45 && age < 65, "45-64")
+      .when(age >= 65, "65 and over")
+
+  /** Inclusive day count of an ISO-date ask window (`from`..`to`), the
+    * reference's @duration: a plan-time int computed on the driver. */
+  def windowDays(from: String, to: String): Int =
+    java.time.temporal.ChronoUnit.DAYS.between(
+      java.time.LocalDate.parse(from), java.time.LocalDate.parse(to)).toInt + 1
+
   /** DATE -> yyyymm INT (load_table.R:753). */
   def dateToYyyymm(d: Column): Column = year(d) * 100 + month(d)
 

@@ -20,6 +20,26 @@ import graft.functions.VectorFns
   */
 object Similarity {
 
+  /** The one rank-and-cut of every ranked-retrieval operator: number the
+    * rows of each `partition` group by `order` (best first), ties to the
+    * LOWER `id`, into `rankCol`, and keep ranks 1..k. One window per
+    * call; the group's rows are sorted, never collected. */
+  private[graft] def topK(df: DataFrame, partition: Seq[String],
+      order: Column, id: String, k: Int, rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(partition.map(col): _*)
+          .orderBy(order, col(id).asc)))
+      .filter(col(rankCol) <= k)
+
+  /** A search over an empty index: the (query_id, neighbor_id, <score>,
+    * rank) schema with no rows. */
+  private def noHits(queries: DataFrame, qid: String,
+      score: String): DataFrame =
+    queries.select(col(qid).as("query_id"),
+      lit(null).cast("long").as("neighbor_id"),
+      lit(null).cast("double").as(score),
+      lit(null).cast("int").as("rank")).limit(0)
+
   /** Exact brute-force cosine top-k.
     * @param queries frame with (qid, qvec) — expected small, broadcast
     * @param corpus  frame with (id, vec) — the big side, scanned once
@@ -28,15 +48,10 @@ object Similarity {
       corpus: DataFrame, id: String, vec: String, k: Int): DataFrame = {
     val q = queries.select(col(qid).as("query_id"), col(qvec).as("_qv"))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("_cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosineSim(col("_qv"), col("_cv")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("_rk").as("rank"))
+    topK(c.crossJoin(broadcast(q))
+        .select(col("query_id"), col("neighbor_id"),
+          VectorFns.cosineSim(col("_qv"), col("_cv")).as("cosine")),
+      Seq("query_id"), col("cosine").desc, "neighbor_id", k, "rank")
   }
 
   /** Symmetric per-vector int8 quantization: scale = max|x| / 127, each
@@ -122,6 +137,15 @@ object Similarity {
     transform(centroidLit(centroids), cen =>
       struct(VectorFns.cosineSim(v, cen.getField("_2")).as("sim"),
         cen.getField("_1").as("cell")))
+
+  /** The float-IVF probe pick, one row per probed cell: the nProbe cells
+    * whose centroids are most cosine-similar to `v` (ties to the higher
+    * cell id), exploded to an int cell id. */
+  private def probeCells(v: Column, centroids: Array[(Int, Seq[Float])],
+      nProbe: Int): Column =
+    explode(transform(
+      slice(reverse(array_sort(scoredCells(v, centroids))), 1, nProbe),
+      _.getField("cell").cast("int")))
 
   private def assignToNearest(c: DataFrame,
       centroids: Array[(Int, Seq[Float])]): DataFrame =
@@ -235,17 +259,14 @@ object Similarity {
     // hashpartitioning(_cell, _salt) already satisfies its clustering,
     // so the per-src rank costs a sort, not another full-pair exchange
     // (opt guide §2.4 — window sharing a preceding join's partitioning)
-    val w = Window.partitionBy(col("_cell"), col("_salt"), col("src"))
-      .orderBy(col("qcosine").desc, col("dst").asc)
     // localCheckpoint: the mutual self-join below consumes edges TWICE
     // (forward + reversed); without materialization the whole pair join
     // re-executes per side. n*k rows — run-scoped, rebuilt per call.
-    val edges = l.join(r, Seq("_cell", "_salt"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("_cell"), col("_salt"), col("src"), col("dst"),
-        VectorFns.cosineSim(col("_sv"), col("_dv")).as("qcosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val edges = topK(l.join(r, Seq("_cell", "_salt"))
+        .filter(col("src") =!= col("dst"))
+        .select(col("_cell"), col("_salt"), col("src"), col("dst"),
+          VectorFns.cosineSim(col("_sv"), col("_dv")).as("qcosine")),
+      Seq("_cell", "_salt", "src"), col("qcosine").desc, "dst", k, "rank")
       .select(col("src"), col("dst"), col("qcosine"), col("rank"))
       .localCheckpoint(true)
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
@@ -260,24 +281,13 @@ object Similarity {
   def ivfTopK(queries: DataFrame, qid: String, qvec: String,
       assigned: DataFrame, centroids: Array[(Int, Seq[Float])],
       k: Int, nProbe: Int = 2): DataFrame = {
-    if (centroids.isEmpty)  // empty index: no neighbors, keep the schema
-      return queries.select(col(qid).as("query_id"),
-        lit(null).cast("long").as("neighbor_id"),
-        lit(null).cast("double").as("cosine"),
-        lit(null).cast("int").as("rank")).limit(0)
+    if (centroids.isEmpty) return noHits(queries, qid, "cosine")
     val q = queries.select(col(qid).as("query_id"), col(qvec).as("_qv"))
-      .withColumn("_cells",
-        slice(reverse(array_sort(scoredCells(col("_qv"), centroids))), 1, nProbe))
-      .withColumn("_cell", explode(transform(col("_cells"), _.getField("cell").cast("int"))))
-      .drop("_cells")
-    val scored = assigned.join(broadcast(q), Seq("_cell"))
-      .select(col("query_id"), col("_id").as("neighbor_id"),
-        VectorFns.cosineSim(col("_qv"), col("_v")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("_rk").as("rank"))
+      .withColumn("_cell", probeCells(col("_qv"), centroids, nProbe))
+    topK(assigned.join(broadcast(q), Seq("_cell"))
+        .select(col("query_id"), col("_id").as("neighbor_id"),
+          VectorFns.cosineSim(col("_qv"), col("_v")).as("cosine")),
+      Seq("query_id"), col("cosine").desc, "neighbor_id", k, "rank")
   }
 
   // -------- Fixed-point (integer) Lloyd IVF --------
@@ -371,11 +381,7 @@ object Similarity {
   def ivfIntTopK(queries: DataFrame, qid: String, qvec: String,
       assigned: DataFrame, centroids: Array[(Int, Seq[Int])],
       k: Int, nProbe: Int): DataFrame = {
-    if (centroids.isEmpty)
-      return queries.select(col(qid).as("query_id"),
-        lit(null).cast("long").as("neighbor_id"),
-        lit(null).cast("double").as("cosine"),
-        lit(null).cast("int").as("rank")).limit(0)
+    if (centroids.isEmpty) return noHits(queries, qid, "cosine")
     val q = quantizeShifted(queries, qid, qvec)
       .withColumnRenamed("_id", "query_id")
       .withColumn("_cells",
@@ -383,15 +389,10 @@ object Similarity {
       .withColumn("_cell",
         explode(transform(col("_cells"), _.getField("cell").cast("int"))))
       .select(col("query_id"), col("_v").as("_qraw"), col("_cell"))
-    val scored = assigned.join(broadcast(q), Seq("_cell"))
-      .select(col("query_id"), col("_id").as("neighbor_id"),
-        VectorFns.cosineSim(col("_qraw"), col("_v")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("_rk").as("rank"))
+    topK(assigned.join(broadcast(q), Seq("_cell"))
+        .select(col("query_id"), col("_id").as("neighbor_id"),
+          VectorFns.cosineSim(col("_qraw"), col("_v")).as("cosine")),
+      Seq("query_id"), col("cosine").desc, "neighbor_id", k, "rank")
   }
 
   // -------- Product quantization (PQ) over the int8 grid --------
@@ -495,11 +496,7 @@ object Similarity {
   def pqTopK(queries: DataFrame, qid: String, qvec: String,
       corpus: DataFrame, id: String, vec: String,
       codebooks: Array[Array[Seq[Double]]], k: Int): DataFrame = {
-    if (codebooks.isEmpty) // empty index: no neighbors, keep the schema
-      return queries.select(col(qid).as("query_id"),
-        lit(null).cast("long").as("neighbor_id"),
-        lit(null).cast("double").as("pq_dist"),
-        lit(null).cast("int").as("rank")).limit(0)
+    if (codebooks.isEmpty) return noHits(queries, qid, "pq_dist")
     val q = withDistTables(
       quantize(queries, qid, qvec)
         .select(col(qid).as("query_id"), col("qvec").as("_qv")),
@@ -510,15 +507,16 @@ object Similarity {
       "qvec", codebooks)
       .select(col("neighbor_id") +:
         codebooks.indices.map(s => col(s"code_$s")): _*)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_dist").asc, col("neighbor_id").asc)
-    encoded.crossJoin(broadcast(q))
-      .withColumn("pq_dist", adcSum(codebooks))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("pq_dist"),
-        col("_rk").as("rank"))
+    adcTopK(encoded.crossJoin(broadcast(q)), codebooks, k)
   }
+
+  /** Score (query, candidate) rows by ADC and keep each query's k nearest:
+    * (query_id, neighbor_id, pq_dist, rank). */
+  private def adcTopK(pairs: DataFrame,
+      codebooks: Array[Array[Seq[Double]]], k: Int): DataFrame =
+    topK(pairs.select(col("query_id"), col("neighbor_id"),
+        adcSum(codebooks).as("pq_dist")),
+      Seq("query_id"), col("pq_dist").asc, "neighbor_id", k, "rank")
 
   /** IVF-PQ — the production composition (the FAISS IVFPQ shape): the
     * coarse quantizer partitions the corpus into cells ([[assignCells]],
@@ -537,10 +535,7 @@ object Similarity {
       codebooks: Array[Array[Seq[Double]]], k: Int,
       nProbe: Int = 2): DataFrame = {
     if (centroids.isEmpty || codebooks.isEmpty)
-      return queries.select(col(qid).as("query_id"),
-        lit(null).cast("long").as("neighbor_id"),
-        lit(null).cast("double").as("pq_dist"),
-        lit(null).cast("int").as("rank")).limit(0)
+      return noHits(queries, qid, "pq_dist")
     val encoded = pqEncode(
       quantize(assignCells(corpus, id, vec, centroids), "_id", "_v"),
       "qvec", codebooks)
@@ -553,21 +548,11 @@ object Similarity {
         quantize(
             queries.select(col(qid).as("query_id"), col(qvec).as("_raw")),
             "query_id", "_raw")
-          .withColumn("_cells", slice(reverse(array_sort(
-            scoredCells(col("_raw"), centroids))), 1, nProbe))
-          .select(col("query_id"), col("qvec").as("_qv"), col("_cells")),
+          .select(col("query_id"), col("_raw"), col("qvec").as("_qv")),
         codebooks)
-      .withColumn("_cell",
-        explode(transform(col("_cells"), _.getField("cell").cast("int"))))
-      .drop("_qv", "_cells")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_dist").asc, col("neighbor_id").asc)
-    encoded.join(broadcast(q), Seq("_cell"))
-      .withColumn("pq_dist", adcSum(codebooks))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("pq_dist"),
-        col("_rk").as("rank"))
+      .withColumn("_cell", probeCells(col("_raw"), centroids, nProbe))
+      .drop("_raw", "_qv")
+    adcTopK(encoded.join(broadcast(q), Seq("_cell")), codebooks, k)
   }
 
   /** Maximal-Marginal-Relevance diversified re-ranking (Carbonell &
@@ -597,24 +582,19 @@ object Similarity {
       lambdaTenths: Int = 7): DataFrame = {
     require(k >= 1 && nCandidates >= k && lambdaTenths >= 0 &&
       lambdaTenths <= 10, "need 1 <= k <= nCandidates, lambda in 0..10")
-    val idot = (a: Column, b: Column) =>
-      aggregate(zip_with(a, b, (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x).cast("long")
     val q = quantize(queries, qid, qvec)
       .select(col(qid).as("query_id"), col("qvec").as("_qv"))
     val c = quantize(corpus, id, vec)
       .select(col(id).as("doc_id"), col("qvec").as("_dv"))
-    val wRel = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("doc_id").asc)
     // localCheckpoint truncates the lineage: the greedy rounds chain
     // anti-joins over `cand`, and without truncation round r re-runs
     // the corpus scan r times (the Components discipline; measured ~2x
     // end-to-end)
-    val cand = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("doc_id"),
-        idot(col("_qv"), col("_dv")).as("rel"), col("_dv"))
-      .withColumn("_rn", row_number().over(wRel))
-      .filter(col("_rn") <= nCandidates)
+    val cand = topK(c.crossJoin(broadcast(q))
+        .select(col("query_id"), col("doc_id"),
+          VectorFns.dotProduct(col("_qv"), col("_dv")).cast("long")
+            .as("rel"), col("_dv")),
+      Seq("query_id"), col("rel").desc, "doc_id", nCandidates, "_rn")
       .localCheckpoint()
     val sims = cand.select(col("query_id"), col("doc_id").as("da"),
         col("_dv").as("_va"))
@@ -622,7 +602,8 @@ object Similarity {
         col("_dv").as("_vb")), Seq("query_id"))
       .filter(col("da") =!= col("db"))
       .select(col("query_id"), col("da"), col("db"),
-        idot(col("_va"), col("_vb")).as("sim"))
+        VectorFns.dotProduct(col("_va"), col("_vb")).cast("long")
+          .as("sim"))
 
     val lam = lit(lambdaTenths.toLong)
     val oneMinus = lit((10 - lambdaTenths).toLong)
@@ -633,19 +614,17 @@ object Similarity {
         col("rel"))
       .join(selected.select(col("query_id"), col("doc_id")),
         Seq("query_id", "doc_id"), "left_anti")
-    val wPick = Window.partitionBy(col("query_id"))
-      .orderBy(col("mmr10").desc, col("doc_id").asc)
     for (r <- 2 to k) {
       val maxSim = sims
         .join(selected.select(col("query_id"),
           col("doc_id").as("db")), Seq("query_id", "db"))
         .groupBy(col("query_id"), col("da").as("doc_id"))
         .agg(max(col("sim")).as("max_sim"))
-      val pick = remaining
-        .join(maxSim, Seq("query_id", "doc_id"))
-        .withColumn("mmr10", lam * col("rel") - oneMinus * col("max_sim"))
-        .withColumn("_rn", row_number().over(wPick))
-        .filter(col("_rn") === 1)
+      val pick = topK(remaining
+          .join(maxSim, Seq("query_id", "doc_id"))
+          .withColumn("mmr10",
+            lam * col("rel") - oneMinus * col("max_sim")),
+        Seq("query_id"), col("mmr10").desc, "doc_id", 1, "_rn")
         .select(col("query_id"), col("doc_id"), col("rel"),
           lit(r).as("rank"), col("mmr10"))
       // truncate per round: selected/remaining each embed the previous
@@ -666,17 +645,16 @@ object Similarity {
     * [[pqEncode]] -> 1-bit here), and the only one whose distance
     * (Hamming) is pure bit arithmetic. */
   def binarize(df: DataFrame, emb: String, dim: Int,
-      out: String = "bvec"): DataFrame = {
+      out: String = "bvec"): DataFrame =
+    df.withColumn(out, signBits(col(emb), dim))
+
+  private def signBits(v: Column, dim: Int): Column = {
     require(dim >= 1, "dim must be positive")
-    val words = (dim + 63) / 64
-    val packed = array((0 until words).map { w =>
-      val hi = math.min(w * 64 + 64, dim)
-      (w * 64 until hi).map { i =>
-        when(col(emb).getItem(i) > 0f, lit(1L << (i - w * 64)))
-          .otherwise(lit(0L))
+    array((0 until (dim + 63) / 64).map { w =>
+      (w * 64 until math.min(w * 64 + 64, dim)).map { i =>
+        when(v.getItem(i) > 0f, lit(1L << (i - w * 64))).otherwise(lit(0L))
       }.reduce(_ bitwiseOR _)
     }: _*)
-    df.withColumn(out, packed)
   }
 
   /** Hamming distance between packed sign-bit words: Σ popcount(a ^ b).
@@ -684,6 +662,42 @@ object Similarity {
   def hammingDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
       lit(0), (acc, x) => acc + x)
+
+  /** The two-stage body of [[binaryTopK]], [[jlTopK]] and
+    * [[matryoshkaTopK]]. Each side carries its int8 grid ([[quantize]])
+    * and a coarse code, `code(raw, int8)`. The coarse stage — the only
+    * one that scans every corpus row, and it reads the codes only —
+    * keeps each query's `coarseK` best by `score` over the two codes,
+    * ordered by `best`. The exact stage joins just those candidates back
+    * to the int8 vectors and keeps the top k by int8 cosine. Ties break
+    * on neighbor id at both stages. Returns (query_id, neighbor_id,
+    * <scoreCol>, qcosine, rank<=k). */
+  private def coarseThenExact(queries: DataFrame, qid: String,
+      qvec: String, corpus: DataFrame, id: String, vec: String, k: Int,
+      coarseK: Int, code: (Column, Column) => Column, scoreCol: String,
+      score: (Column, Column) => Column, best: Column => Column): DataFrame = {
+    require(k >= 1 && coarseK >= k, "need 1 <= k <= coarseK")
+    def side(df: DataFrame, key: String, idCol: String, v: String) =
+      quantize(df.select(col(idCol).as(key), col(v).as("_raw")), key, "_raw")
+        .select(col(key), col("qvec").as(key + "_q"),
+          code(col("_raw"), col("qvec")).as(key + "_c"))
+    val q = side(queries, "query_id", qid, qvec)
+    val c = side(corpus, "neighbor_id", id, vec)
+    val cand = topK(c.select(col("neighbor_id"), col("neighbor_id_c"))
+        .crossJoin(broadcast(q.select(col("query_id"), col("query_id_c"))))
+        .select(col("query_id"), col("neighbor_id"),
+          score(col("query_id_c"), col("neighbor_id_c")).as(scoreCol)),
+      Seq("query_id"), best(col(scoreCol)), "neighbor_id", coarseK, "_cr")
+      .drop("_cr")
+    topK(c.select(col("neighbor_id"), col("neighbor_id_q"))
+        .join(broadcast(cand), Seq("neighbor_id"))
+        .join(broadcast(q.select(col("query_id"), col("query_id_q"))),
+          Seq("query_id"))
+        .select(col("query_id"), col("neighbor_id"), col(scoreCol),
+          VectorFns.cosineSim(col("query_id_q"), col("neighbor_id_q"))
+            .as("qcosine")),
+      Seq("query_id"), col("qcosine").desc, "neighbor_id", k, "rank")
+  }
 
   /** Two-stage binary ANN (the classic 1-bit retrieval shape): coarse
     * Hamming top-`coarseK` over the packed sign bits — the ONLY stage
@@ -699,41 +713,10 @@ object Similarity {
     * 100-TB vector stores. */
   def binaryTopK(queries: DataFrame, qid: String, qvec: String,
       corpus: DataFrame, id: String, vec: String, dim: Int, k: Int,
-      coarseK: Int): DataFrame = {
-    require(k >= 1 && coarseK >= k, "need 1 <= k <= coarseK")
-    val bq = binarize(queries, qvec, dim)
-      .select(col(qid).as("query_id"), col("bvec").as("_qb"))
-    val bc = binarize(corpus, vec, dim)
-      .select(col(id).as("neighbor_id"), col("bvec").as("_cb"))
-    val wHam = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = bc.crossJoin(broadcast(bq))
-      .select(col("query_id"), col("neighbor_id"),
-        hammingDist(col("_qb"), col("_cb")).as("hamming"))
-      .withColumn("_cr", row_number().over(wHam))
-      .filter(col("_cr") <= coarseK)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"))
-    val cq = quantize(queries, qid, qvec)
-      .select(col(qid).as("query_id"), col("qvec").as("_qq"))
-    val cc = quantize(corpus, id, vec)
-      .select(col(id).as("neighbor_id"), col("qvec").as("_cq"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcosine").desc, col("neighbor_id").asc)
-    cc.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(cq), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        VectorFns.cosineSim(col("_qq"), col("_cq")).as("qcosine"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-  }
+      coarseK: Int): DataFrame =
+    coarseThenExact(queries, qid, qvec, corpus, id, vec, k, coarseK,
+      (raw, _) => signBits(raw, dim), "hamming", hammingDist, _.asc)
 
-  /** Matryoshka two-stage ANN (Kusupati et al. 2022: MRL embeddings are
-    * trained so every prefix is itself an embedding): coarse scoring on
-    * the first `prefixDim` int8 components (reads prefixDim/dim of the
-    * vector bytes), exact full-dim int8 re-rank over the candidates.
-    * Both stages integer-exact under one double division; ties on
-    * neighbor id. Returns (query_id, neighbor_id, prefix_cosine,
-    * qcosine, rank<=k). */
   /** Deterministic sign matrix for the JL projection: sign(j, i) from
     * the top bit of md5("jl:j:i") — the catalog's engine-portable hash,
     * reproducible in SQL. */
@@ -763,69 +746,31 @@ object Similarity {
     * the prefix, the projection mixes ALL input dims, so it degrades
     * gracefully when information is spread across components. The
     * projection matrix derives from portable md5 bits and never
-    * materializes beyond a dOut x dIn literal. */
+    * materializes beyond a dOut x dIn literal. Returns (query_id,
+    * neighbor_id, proj_cosine, qcosine, rank<=k). */
   def jlTopK(queries: DataFrame, qid: String, qvec: String,
       corpus: DataFrame, id: String, vec: String, dIn: Int, dOut: Int,
       k: Int, coarseK: Int): DataFrame = {
-    require(k >= 1 && coarseK >= k && dOut >= 1,
-      "need 1 <= k <= coarseK, dOut >= 1")
+    require(dOut >= 1, "dOut >= 1")
     val signs = jlSigns(dOut, dIn)
-    val q = quantize(queries, qid, qvec)
-      .select(col(qid).as("query_id"), col("qvec").as("_qq"),
-        jlProject(col("qvec"), signs).as("_qp"))
-    val c = quantize(corpus, id, vec)
-      .select(col(id).as("neighbor_id"), col("qvec").as("_cq"),
-        jlProject(col("qvec"), signs).as("_cp"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("proj_cosine").desc, col("neighbor_id").asc)
-    val cand = c.select(col("neighbor_id"), col("_cp"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("_qp"))))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosineSim(col("_qp"), col("_cp")).as("proj_cosine"))
-      .withColumn("_cr", row_number().over(wPre))
-      .filter(col("_cr") <= coarseK)
-      .select(col("query_id"), col("neighbor_id"), col("proj_cosine"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcosine").desc, col("neighbor_id").asc)
-    c.select(col("neighbor_id"), col("_cq"))
-      .join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(q.select(col("query_id"), col("_qq"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("proj_cosine"),
-        VectorFns.cosineSim(col("_qq"), col("_cq")).as("qcosine"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+    coarseThenExact(queries, qid, qvec, corpus, id, vec, k, coarseK,
+      (_, q8) => jlProject(q8, signs), "proj_cosine",
+      VectorFns.cosineSim, _.desc)
   }
 
+  /** Matryoshka two-stage ANN (Kusupati et al. 2022: MRL embeddings are
+    * trained so every prefix is itself an embedding): coarse scoring on
+    * the first `prefixDim` int8 components (reads prefixDim/dim of the
+    * vector bytes), exact full-dim int8 re-rank over the candidates.
+    * Both stages integer-exact under one double division; ties on
+    * neighbor id. Returns (query_id, neighbor_id, prefix_cosine,
+    * qcosine, rank<=k). */
   def matryoshkaTopK(queries: DataFrame, qid: String, qvec: String,
       corpus: DataFrame, id: String, vec: String, prefixDim: Int, k: Int,
       coarseK: Int): DataFrame = {
-    require(k >= 1 && coarseK >= k && prefixDim >= 1,
-      "need 1 <= k <= coarseK, prefixDim >= 1")
-    val q = quantize(queries, qid, qvec)
-      .select(col(qid).as("query_id"), col("qvec").as("_qq"),
-        slice(col("qvec"), 1, prefixDim).as("_qp"))
-    val c = quantize(corpus, id, vec)
-      .select(col(id).as("neighbor_id"), col("qvec").as("_cq"),
-        slice(col("qvec"), 1, prefixDim).as("_cp"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("prefix_cosine").desc, col("neighbor_id").asc)
-    val cand = c.select(col("neighbor_id"), col("_cp"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("_qp"))))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFns.cosineSim(col("_qp"), col("_cp")).as("prefix_cosine"))
-      .withColumn("_cr", row_number().over(wPre))
-      .filter(col("_cr") <= coarseK)
-      .select(col("query_id"), col("neighbor_id"), col("prefix_cosine"))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcosine").desc, col("neighbor_id").asc)
-    c.select(col("neighbor_id"), col("_cq"))
-      .join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(q.select(col("query_id"), col("_qq"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("prefix_cosine"),
-        VectorFns.cosineSim(col("_qq"), col("_cq")).as("qcosine"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+    require(prefixDim >= 1, "prefixDim >= 1")
+    coarseThenExact(queries, qid, qvec, corpus, id, vec, k, coarseK,
+      (_, q8) => slice(q8, 1, prefixDim), "prefix_cosine",
+      VectorFns.cosineSim, _.desc)
   }
 }

@@ -668,11 +668,8 @@ object TextAnalysis {
       .crossJoin(broadcast(stats))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(idf * tfNorm), 6).as("bm25"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("bm25"), col("rank"))
+    Similarity.topK(scored, Seq("query_id"), col("bm25").desc, "doc_id", k,
+      "rank")
   }
 
   /** HARD-NEGATIVE MINING for contrastive retrieval training — per
@@ -702,10 +699,8 @@ object TextAnalysis {
       positives.select(col(qid).as("query_id"),
         col("pos_doc_id").as("doc_id")),
       Seq("query_id", "doc_id"), "left_anti")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rank").asc)
-    negs.withColumn("neg_rank", row_number().over(w))
-      .filter(col("neg_rank") <= negK)
+    Similarity.topK(negs, Seq("query_id"), col("rank").asc, "doc_id", negK,
+        "neg_rank")
       .select(col("query_id"), col("doc_id"), col("bm25"),
         col("neg_rank"))
   }
@@ -1025,12 +1020,8 @@ object TextAnalysis {
       .map(i => coalesce(lit(1.0) / (lit(kRrf) + col(s"rank_$i")),
         lit(0.0)))
       .reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_score").desc, col("doc_id").asc)
-    joined
-      .withColumn("rrf_score", score)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    Similarity.topK(joined.withColumn("rrf_score", score), Seq("query_id"),
+      col("rrf_score").desc, "doc_id", topK, "rank")
   }
 
   /** DSIR data-selection importance weights (Xie et al., NeurIPS 2023):

@@ -35,16 +35,6 @@ import graft.functions.DateFns
   * section that needs it; output is condition×age-group bounded. */
 object McareCcwTmpQa {
 
-  /** The reference's seven-level age group over the T-SQL age. */
-  private def ageGrp7(age: org.apache.spark.sql.Column) =
-    when(age >= 0 && age < 5, "0-4")
-      .when(age >= 5 && age < 12, "5-11")
-      .when(age >= 12 && age < 18, "12-17")
-      .when(age >= 18 && age < 25, "18-24")
-      .when(age >= 25 && age < 45, "25-44")
-      .when(age >= 45 && age < 65, "45-64")
-      .when(age >= 65, "65 and over")
-
   /** Battery over:
     *  - ccw     (id_mcare, ccw_code, ccw_desc, first_encounter_date,
     *            last_encounter_date) — the q230 build frame
@@ -59,7 +49,7 @@ object McareCcwTmpQa {
     // below (or a missing person) falls through to NULL
     val age = when(rawAge >= 0, rawAge).when(rawAge === -1, lit(0))
     val aged = demo.select(col("id_mcare").as("demo_id"),
-      ageGrp7(age).as("age_grp7"))
+      DateFns.ageGrp7(age).as("age_grp7"))
 
     val nullCode = lit(null).cast("int").as("ccw_code")
     val nullDesc = lit(null).cast("string").as("ccw_desc")

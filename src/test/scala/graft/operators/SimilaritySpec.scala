@@ -6,8 +6,8 @@ import graft.SparkSpec
 import graft.queries.Q
 
 /** ANN specs: IVF recall vs the exact brute-force baseline — the contract
-  * VectorQueries promises (q42 is approximate, so its correctness signal
-  * lives here, not in a SQL oracle). */
+  * VectorQueries promises — and the rank cut every ranked-retrieval
+  * operator shares. */
 class SimilaritySpec extends SparkSpec {
 
   test("IVF with nProbe = nCells degenerates to exact brute force") {
@@ -183,6 +183,55 @@ class SimilaritySpec extends SparkSpec {
     assert(math.abs(out(0).getDouble(2) - 1.0) < 1e-6)
     // cosine non-increasing with rank
     assert(out.map(_.getDouble(2)).sliding(2).forall(w => w(0) >= w(1) - 1e-9))
+  }
+
+  test("a tie at the k-th place keeps the lower id, in every ranked " +
+      "retrieval operator") {
+    import spark.implicits._
+    // doc 5 is the query itself; docs 9 and 2 are one vector, tied in
+    // every score just behind it; doc 7 points away. At k = 2 the cut
+    // falls inside the tie: 2 stays, 9 goes. The two-stage operators
+    // cut at coarseK = 2 too, where 5, 9 and 2 share one sign pattern.
+    val qv = Seq(1.0f, 0.5f, 0.25f, -0.5f)
+    val tied = Seq(1.0f, 0.4f, 0.3f, -0.5f)
+    val corpus = Seq((9L, tied), (5L, qv), (7L, Seq(-1.0f, 0.5f, -0.2f,
+      0.6f)), (2L, tied)).toDF("vec_id", "embedding")
+    val queries = Seq((0L, qv)).toDF("vec_id", "embedding")
+    val cen = Array((0, Seq(1.0f, 0.0f, 0.0f, 0.0f)))
+    def kept(df: org.apache.spark.sql.DataFrame, id: String) =
+      df.orderBy(col("rank")).select(col(id)).as[Long].collect().toSeq
+    val want = Seq(5L, 2L)
+    val vector = Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(queries, "vec_id",
+        "embedding", corpus, "vec_id", "embedding", k = 2),
+      "ivfTopK" -> Similarity.ivfTopK(queries, "vec_id", "embedding",
+        Similarity.assignCells(corpus, "vec_id", "embedding", cen), cen,
+        k = 2, nProbe = 1),
+      "pqTopK" -> Similarity.pqTopK(queries, "vec_id", "embedding",
+        corpus, "vec_id", "embedding",
+        Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 2,
+          k = 4), k = 2),
+      "binaryTopK" -> Similarity.binaryTopK(queries, "vec_id",
+        "embedding", corpus, "vec_id", "embedding", dim = 4, k = 2,
+        coarseK = 2),
+      "jlTopK" -> Similarity.jlTopK(queries, "vec_id", "embedding",
+        corpus, "vec_id", "embedding", dIn = 4, dOut = 4, k = 2,
+        coarseK = 2),
+      "matryoshkaTopK" -> Similarity.matryoshkaTopK(queries, "vec_id",
+        "embedding", corpus, "vec_id", "embedding", prefixDim = 4, k = 2,
+        coarseK = 2))
+    // the same cut through the lexical and fusion operators
+    val docs = Seq((9L, "apple pear"), (5L, "apple"), (7L, "plum"),
+      (2L, "apple pear")).toDF("doc_id", "text")
+    val l0 = Seq(("Q", 5L, 1), ("Q", 9L, 2)).toDF("query_id", "doc_id", "rank")
+    val l1 = Seq(("Q", 5L, 1), ("Q", 2L, 2)).toDF("query_id", "doc_id", "rank")
+    val text = Seq(
+      "bm25TopK" -> TextAnalysis.bm25TopK(docs,
+        Seq(("Q", "apple")).toDF("query_id", "query_text"), k = 2),
+      "rrfFuse" -> TextAnalysis.rrfFuse(Seq(l0, l1), topK = 2))
+    val got = vector.map { case (op, df) => op -> kept(df, "neighbor_id") } ++
+      text.map { case (op, df) => op -> kept(df, "doc_id") }
+    assert(got.filter(_._2 != want) === Nil)
   }
 
   test("int8 quantization: bounds, zero vectors, high top-k agreement") {

@@ -1,5 +1,14 @@
+"""Compare a graft.Verify output dir against its DuckDB oracle SQL.
+
+usage: compare_oracle.py OUT_DIR [SF_DIR] [RESULT_JSON]
+
+Exits 1 when any query is BAD: a hash mismatch, a missing oracle, or a
+query that threw in graft.Verify (listed in OUT_DIR/errors.json).
+"""
 import duckdb, json, glob, os, sys, time
-out = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_r3b'
+if len(sys.argv) < 2:
+    sys.exit(__doc__)
+out = sys.argv[1]
 sf = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
 # optional third arg: write the full per-query result dict (incl.
 # per-oracle seconds, so compare-cost growth is visible before it
@@ -51,6 +60,12 @@ for d in sorted(glob.glob(f'{out}/q*')):
             r['diff_oracle_only'] = [list(t) for t in only_o]
             r['cols_sorted'] = sorted(sdf.columns)
     results[name] = r
+# a query that threw wrote no parquet dir: count it from errors.json, or
+# it drops out of TOTAL unnoticed
+err_path = f'{out}/errors.json'
+if os.path.exists(err_path):
+    for name, msg in json.load(open(err_path)).items():
+        results[name] = {'err': f'verify: {msg}'}
 bad = {k: v for k, v in results.items() if not v.get('hash_match', False)}
 print('TOTAL', len(results), 'PASS', len(results) - len(bad))
 for k, v in bad.items(): print('BAD', k, v)
@@ -59,3 +74,4 @@ print('SLOWEST ORACLES:', [(k, v.get('oracle_sec')) for k, v in slow])
 if out_json:
     with open(out_json, 'w') as f:
         json.dump(results, f, indent=1)
+sys.exit(1 if bad else 0)
