@@ -83,35 +83,38 @@ object ClaimMoud {
         rx.select(col("id_person"), col("service_date"), col("bup_rx_flag"))
           .withColumn("_is_proc", lit(0)),
         allowMissingColumns = true)
-    val wm = Window.partitionBy(col("id_person"),
-      date_format(col("service_date"), "yyyyMM"))
+    resolveH0033(unioned, col("service_date"))
+      .filter(col("_is_proc") === 1)
+      .drop("moud_proc_flag_tbd", "bup_rx_flag", "_is_proc")
+  }
+
+  /** STEP 6's verdict, shared with [[McareClaimMoud.resolveAndCollapse]]:
+    * person-month (`date`'s yyyyMM) window sums of the meth / bup proc
+    * flags and the bup rx flag over every row of `events`, then each
+    * H0033 row's meth/bup flags from those sums — methadone when meth
+    * events >= bup events and nonzero, bup when bup events dominate, and
+    * with no proc evidence, bup only when a bup fill exists that month.
+    * Other rows keep their flags. */
+  private[builds] def resolveH0033(events: DataFrame,
+      date: Column): DataFrame = {
+    val wm = Window.partitionBy(col("id_person"), date_format(date, "yyyyMM"))
     def msum(c: String) = sum(coalesce(col(c), lit(0))).over(wm)
     val h = col("procedure_code") === "H0033"
-    unioned
+    val (meth, bup, rx) = (col("meth_sum"), col("bup_sum"), col("bup_rx_sum"))
+    // `flag`'s value when the month reads methadone (m) or bup (b)
+    def verdict(flag: String, m: Int, b: Int): Column =
+      when(h && meth === 0 && bup === 0 && rx === 0, m)
+        .when(h && meth === 0 && bup === 0 && rx > 0, b)
+        .when(h && meth >= bup && meth =!= 0, m)
+        .when(h && meth < bup, b)
+        .otherwise(col(flag))
+    events
       .withColumn("meth_sum", msum("meth_proc_flag"))
       .withColumn("bup_sum", msum("bup_proc_flag"))
       .withColumn("bup_rx_sum", msum("bup_rx_flag"))
-      .filter(col("_is_proc") === 1)
-      .withColumn("meth_proc_flag",
-        when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-          col("bup_rx_sum") === 0, 1)
-          .when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-            col("bup_rx_sum") > 0, 0)
-          .when(h && col("meth_sum") >= col("bup_sum") &&
-            col("meth_sum") =!= 0, 1)
-          .when(h && col("meth_sum") < col("bup_sum"), 0)
-          .otherwise(col("meth_proc_flag")))
-      .withColumn("bup_proc_flag",
-        when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-          col("bup_rx_sum") === 0, 0)
-          .when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-            col("bup_rx_sum") > 0, 1)
-          .when(h && col("meth_sum") >= col("bup_sum") &&
-            col("meth_sum") =!= 0, 0)
-          .when(h && col("meth_sum") < col("bup_sum"), 1)
-          .otherwise(col("bup_proc_flag")))
-      .drop("meth_sum", "bup_sum", "bup_rx_sum", "moud_proc_flag_tbd",
-        "bup_rx_flag", "_is_proc")
+      .withColumn("meth_proc_flag", verdict("meth_proc_flag", 1, 0))
+      .withColumn("bup_proc_flag", verdict("bup_proc_flag", 0, 1))
+      .drop("meth_sum", "bup_sum", "bup_rx_sum")
   }
 
   /** STEP 8 over the per-(person, day) rollup: next-methadone-date gap,

@@ -1,7 +1,6 @@
 package graft.builds
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** mcare MOUD treatment events — the reference's
@@ -30,8 +29,9 @@ import org.apache.spark.sql.functions._
   *    re-joins the >1 groups on (id, date, moudtype) WITHOUT
   *    admin_method, so an hcpcs row with a different admin method than
   *    the duplicated one is ALSO deleted (artifact, kept);
-  *  - **H0033 monthly-context disambiguation** (STEP 6): identical CASE
-  *    to mcaid — reuses the window-aggregate formulation.
+  *  - **H0033 monthly-context disambiguation** (STEP 6): the mcaid
+  *    CASE itself — [[ClaimMoud.resolveH0033]] over the last service
+  *    date.
   *
   * Scale: the value-set and NDC dims broadcast; the union's DISTINCT,
   * the person-month window, and the (id, date, moudtype) dedup joins
@@ -134,7 +134,7 @@ object McareClaimMoud {
       .distinct()
   }
 
-  /** STEP 6 (the mcaid CASE verbatim) + the STEP-5/6 collapse: proc +
+  /** STEP 6 ([[ClaimMoud.resolveH0033]]) + the STEP-5/6 collapse: proc +
     * rx rows in ONE union AT CLAIM-HEADER GRAIN (the reference's
     * union_1 keeps claim_header_id, so same-day duplicate claims count
     * in the monthly sums and their nominal supplies add — the inflation
@@ -160,34 +160,8 @@ object McareClaimMoud {
         .withColumn("unspec_proc_flag", lit(null).cast("int"))
         .withColumn("_is_proc", lit(0)))
       .distinct()
-    val wm = Window.partitionBy(col("id_person"),
-      date_format(col("last_service_date"), "yyyyMM"))
-    def msum(c: String) = sum(coalesce(col(c), lit(0))).over(wm)
-    val h = col("procedure_code") === "H0033"
-    val resolved = unioned
-      .withColumn("meth_sum", msum("meth_proc_flag"))
-      .withColumn("bup_sum", msum("bup_proc_flag"))
-      .withColumn("bup_rx_sum", msum("bup_rx_flag"))
-      .withColumn("meth_proc_flag",
-        when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-          col("bup_rx_sum") === 0, 1)
-          .when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-            col("bup_rx_sum") > 0, 0)
-          .when(h && col("meth_sum") >= col("bup_sum") &&
-            col("meth_sum") =!= 0, 1)
-          .when(h && col("meth_sum") < col("bup_sum"), 0)
-          .otherwise(col("meth_proc_flag")))
-      .withColumn("bup_proc_flag",
-        when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-          col("bup_rx_sum") === 0, 0)
-          .when(h && col("meth_sum") === 0 && col("bup_sum") === 0 &&
-            col("bup_rx_sum") > 0, 1)
-          .when(h && col("meth_sum") >= col("bup_sum") &&
-            col("meth_sum") =!= 0, 0)
-          .when(h && col("meth_sum") < col("bup_sum"), 1)
-          .otherwise(col("bup_proc_flag")))
-      .drop("meth_sum", "bup_sum", "bup_rx_sum", "_is_proc",
-        "procedure_code", "claim_header_id", "ndc")
+    val resolved = ClaimMoud.resolveH0033(unioned, col("last_service_date"))
+      .drop("_is_proc", "procedure_code", "claim_header_id", "ndc")
     resolved.groupBy(col("id_person"), col("last_service_date"),
         col("meth_proc_flag"), col("bup_proc_flag"), col("nal_proc_flag"),
         col("unspec_proc_flag"), col("bup_rx_flag"), col("nal_rx_flag"),

@@ -27,9 +27,29 @@ import graft.functions.VectorFns
   */
 object Dedup {
 
-  /** Normalize + whitespace-tokenize. */
+  /** What a word is, for every corpus operator: the lowercased text, its
+    * edge spaces trimmed, split on whitespace runs. `trim` strips ' '
+    * only, so an edge tab or newline leaves an empty edge token; the
+    * array is the one `split(normText(text), " ")` gives. */
   def tokens(text: Column): Column =
-    split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
+    split(lower(trim(text)), "\\s+")
+
+  /** [[tokens]] without its empty tokens. */
+  private[graft] def words(text: Column): Column =
+    filter(tokens(text), w => length(w) > 0)
+
+  /** The text [[tokens]] reads, whitespace runs folded to one space: the
+    * input of the exact fingerprint and the winnowing kernel. */
+  private[graft] def normText(text: Column): Column =
+    regexp_replace(lower(trim(text)), "\\s+", " ")
+
+  /** One row per non-empty token of `text`: the `keep` columns, then the
+    * token as `token`. An explode and a filter, no lambda, so the plan
+    * stays codegen'd. */
+  private[graft] def tokenRows(df: DataFrame, text: Column, token: String,
+      keep: Column*): DataFrame =
+    df.select(keep :+ explode(tokens(text)).as(token): _*)
+      .filter(length(col(token)) > 0)
 
   /** Distinct n-token shingle HASHES, sorted ascending — the candidate and
     * verification unit for near-dup ops (codegen'd single pass; see
@@ -438,7 +458,7 @@ object Dedup {
   def winnowOverlapPairs(docs: DataFrame, id: String, text: String,
       k: Int = 8, w: Int = 4, minShared: Int = 10,
       maxBucket: Int = 10000): DataFrame = {
-    val norm = regexp_replace(lower(trim(col(text))), "\\s+", " ")
+    val norm = normText(col(text))
     val fps = docs.select(col(id).as("_id"),
       explode(graft.functions.WinnowFingerprints.winnow(norm, k, w)).as("_fp"))
     bucketPairs(fps, Seq("_fp"), maxBucket)

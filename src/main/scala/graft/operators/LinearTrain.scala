@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle replays the rounds as generated CTEs (the q251
   * DoReMi / q260 EM discipline for iterative fixed-point ML).
   *
-  * Features: md5-bucket unigram COUNTS (the repo's engine-portable
-  * hash convention, shared with dsirWeights/linearQualityScore — and
+  * Features: md5-bucket unigram COUNTS over [[Dedup.tokenRows]] words,
+  * each bucket [[Sketches.md5Bucket]] (the repo's engine-portable hash,
+  * the one helper dsirWeights/linearQualityScore/jsdMatrix call — and
   * the same bag-of-words the fixed-weight scorer consumes; PRESENCE
   * features were tried and rejected: long documents cover every
   * bucket, making presence vectors near-constant and the task
@@ -42,13 +43,9 @@ object LinearTrain {
       rounds: Int = 5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = docs.select(col(id).as("doc_id"),
-        labelCol.cast("int").as("y01"),
-        explode(split(trim(lower(col(text))), "\\s+")).as("_t"))
-      .filter(length(col("_t")) > 0)
-      .withColumn("_b",
-        pmod(conv(substring(md5(col("_t")), 1, 8), 16, 10).cast("long"),
-          lit(nBuckets)))
+    val toks = Dedup.tokenRows(docs, col(text), "_t", col(id).as("doc_id"),
+        labelCol.cast("int").as("y01"))
+      .withColumn("_b", Sketches.md5Bucket(col("_t"), nBuckets))
     val feats = toks.groupBy(col("doc_id"), col("y01"), col("_b"))
       .agg(count(lit(1)).as("cnt"))
       .unionByName(docs.select(col(id).as("doc_id"),

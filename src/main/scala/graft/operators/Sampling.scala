@@ -102,9 +102,8 @@ object Sampling {
     * sampling over 100 TB is one scan. */
   def weightedSample(df: DataFrame, idCol: String, weight: Column,
       k: Int, salt: String = "ares"): DataFrame = {
-    val bucket = conv(substring(md5(concat_ws(":", lit(salt),
-      col(idCol).cast("string"))), 1, 8), 16, 10).cast("long")
-    val u = (bucket.cast("double") + 0.5) / 4294967296.0
+    val u = (Sketches.saltedDraw(salt, col(idCol)).cast("double") + 0.5) /
+      4294967296.0
     val keyed = df.select(col(idCol), weight.cast("long").as("w"))
       .filter(col("w") > 0)
       .withColumn("ares_key",

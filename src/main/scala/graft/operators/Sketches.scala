@@ -25,14 +25,30 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  // first/second 32 bits of md5 — same portable halves as Dedup's Bloom
-  private def h1(item: Column): Column =
+  /** The catalog's engine-portable 32-bit draw: the first 32 bits of
+    * md5, a long in [0, 2^32). Every md5 u32 in the catalog is this
+    * one expression: the sketch rows here, [[saltedDraw]] and
+    * [[md5Bucket]]. */
+  private[graft] def md5U32(item: Column): Column =
     conv(substring(md5(item), 1, 8), 16, 10).cast("long")
+  // second 32 bits of md5 — same portable halves as Dedup's Bloom
   private def h2(item: Column): Column =
     conv(substring(md5(item), 9, 8), 16, 10).cast("long")
 
+  /** The per-row uniform draw of the samplers and splitters: the
+    * [[md5U32]] of "salt:id". A pure function of (salt, id), so a
+    * re-run, a re-partition or another engine draws the same value, and
+    * a new salt is an independent draw. */
+  private[graft] def saltedDraw(salt: String, id: Column): Column =
+    md5U32(concat_ws(":", lit(salt), id.cast("string")))
+
+  /** The hashed bag-of-words feature of a token: its [[md5U32]] mod
+    * `nBuckets`, a long in [0, nBuckets). */
+  private[graft] def md5Bucket(token: Column, nBuckets: Int): Column =
+    pmod(md5U32(token), lit(nBuckets))
+
   private def bucketOf(item: Column, row: Column, width: Int): Column =
-    pmod(h1(item) + row * h2(item), lit(width.toLong))
+    pmod(md5U32(item) + row * h2(item), lit(width.toLong))
 
   /** Build the depth x width grid from weighted items:
     * (row, bucket, cnt), absent cells implicitly 0. */

@@ -13,7 +13,7 @@ object TextAnalysis {
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column =
-    size(split(trim(text), "\\s+"))
+    size(Dedup.tokens(text))
 
   /** BPE-ish token count: runs of letters, runs of digits, or single
     * non-space symbols — a cheap proxy for subword token counts. */
@@ -62,7 +62,7 @@ object TextAnalysis {
     * reference). Prefer [[withLangId]] in per-row hot paths — it stages the
     * scan in a materialized column so it runs exactly once. */
   def langId(text: Column): Column = {
-    val best = bestLang(split(lower(trim(text)), "\\s+"))
+    val best = bestLang(Dedup.tokens(text))
     when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
@@ -71,7 +71,7 @@ object TextAnalysis {
     * (CollapseProject keeps non-cheap aliases that are referenced more than
     * once materialized, which is exactly what we rely on here.) */
   def withLangId(df: DataFrame, text: String, out: String): DataFrame =
-    df.withColumn("_li_toks", split(lower(trim(col(text))), "\\s+"))
+    df.withColumn("_li_toks", Dedup.tokens(col(text)))
       .withColumn("_li_best", bestLang(col("_li_toks")))
       .withColumn(out,
         when(col("_li_best.score") > 0, col("_li_best.lang")).otherwise(lit("und")))
@@ -88,7 +88,7 @@ object TextAnalysis {
 
   /** Exact content fingerprint: md5 of whitespace/case-normalized text. */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
+    md5(Dedup.normText(text))
 
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1 "repetitious
     * text" filters, as reimplemented by the public Dolma/RedPajama
@@ -207,10 +207,7 @@ object TextAnalysis {
     */
   def vocabCoverage(docs: DataFrame, id: String = "doc_id",
       text: String = "text", minCount: Long = 5): DataFrame = {
-    val occ = docs
-      .select(col(id).as("doc_id"),
-        explode(split(trim(lower(col(text))), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
+    val occ = Dedup.tokenRows(docs, col(text), "w", col(id).as("doc_id"))
       .groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("n"))
     val vocab = occ.groupBy(col("w"))
@@ -377,8 +374,7 @@ object TextAnalysis {
     require(splits.nonEmpty &&
       math.abs(splits.map(_._2).sum - 1.0) < 1e-9,
       "split fractions must sum to 1")
-    val bucket = conv(substring(md5(concat_ws(":", lit(salt),
-      col(idCol).cast("string"))), 1, 8), 16, 10).cast("long")
+    val bucket = Sketches.saltedDraw(salt, col(idCol))
     val cuts = splits.scanLeft(0.0)(_ + _._2).tail
       .map(c => math.round(c * 4294967296.0))
     // chained range test, first cut wins
@@ -426,8 +422,7 @@ object TextAnalysis {
           .otherwise(lit(1.0)))
       .withColumn("_thr",
         floor(col("accept_rate") * lit(4294967296.0)).cast("long"))
-    val draw = conv(substring(md5(concat_ws(":", lit(salt),
-      col(idCol).cast("string"))), 1, 8), 16, 10).cast("long")
+    val draw = Sketches.saltedDraw(salt, col(idCol))
     docs.join(broadcast(rates),
         col(domainCol) === col("_dom"))
       .withColumn("kept", (draw < col("_thr")).cast("int"))
@@ -480,8 +475,7 @@ object TextAnalysis {
           floor(col("_rem").cast("double") / col("tok_d") *
             lit(4294967296.0)).cast("long"))
           .otherwise(lit(0L)))
-    val draw = conv(substring(md5(concat_ws(":", lit(salt),
-      col(idCol).cast("string"))), 1, 8), 16, 10).cast("long")
+    val draw = Sketches.saltedDraw(salt, col(idCol))
     docs.join(broadcast(dims), col(domainCol) === col("_dom"))
       .withColumn("_copies",
         col("full_epochs") + when(draw < col("_thr"), 1L).otherwise(0L))
@@ -552,7 +546,7 @@ object TextAnalysis {
       text: String = "text", minTok: Int = 4, mask: Int = 8,
       maxTok: Int = 16): DataFrame = {
     require(0 < minTok && minTok <= maxTok, "need 0 < minTok <= maxTok")
-    val toks = filter(Dedup.tokens(col(text)), w => length(w) > 0)
+    val toks = Dedup.words(col(text))
     // Higher-order functions run INTERPRETED (no codegen, no common-
     // subexpression elimination), so a column referenced inside a
     // lambda re-evaluates its whole defining expression at every
@@ -566,9 +560,9 @@ object TextAnalysis {
     // bare sequence(1, 0) would count DOWN)
     def okExpr(t: Column, n: Column): Column = when(n > 1,
       transform(sequence(lit(1), n - 1), i =>
-        conv(substring(md5(concat(element_at(t, i), lit(" "),
-          element_at(t, i + 1))), 1, 8), 16, 10).cast("long")
-          % mask === 0)).otherwise(array().cast("array<boolean>"))
+        Sketches.md5U32(concat(element_at(t, i), lit(" "),
+          element_at(t, i + 1))) % mask === 0))
+      .otherwise(array().cast("array<boolean>"))
     // nxt[s+1] = the cut that follows a chunk starting after
     // position s: first eligible gap in [s+min, min(s+max, n-1)],
     // else the forced cut min(s+max, n)
@@ -640,7 +634,7 @@ object TextAnalysis {
       qid: String = "query_id", qtext: String = "query_text",
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = docs.select(col(id).as("doc_id"),
-        split(trim(lower(col(text))), "\\s+").as("_t"))
+        Dedup.tokens(col(text)).as("_t"))
       .select(col("doc_id"), explode(col("_t")).as("tok"),
         size(col("_t")).cast("long").as("dl"))
       .filter(length(col("tok")) > 0)
@@ -648,11 +642,9 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
     val stats = docs.agg(
       count(lit(1)).cast("long").as("n_docs"),
-      sum(size(split(trim(lower(col(text))), "\\s+")).cast("long"))
-        .as("tot_dl"))
-    val qterms = queries.select(col(qid).as("query_id"),
-        explode(split(trim(lower(col(qtext))), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0).distinct()
+      sum(tokenCount(col(text)).cast("long")).as("tot_dl"))
+    val qterms = Dedup.tokenRows(queries, col(qtext), "tok",
+      col(qid).as("query_id")).distinct()
     val dfreq = postings
       .join(broadcast(qterms.select(col("tok")).distinct()), Seq("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -725,11 +717,8 @@ object TextAnalysis {
   def purityVoteScore(train: DataFrame, score: DataFrame,
       label: Column, id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    def toks(df: DataFrame, extra: Seq[Column]) = df
-      .select(Seq(col(id).as("doc_id"),
-        explode(split(trim(lower(col(text))), "\\s+")).as("tok")) ++
-        extra: _*)
-      .filter(length(col("tok")) > 0)
+    def toks(df: DataFrame, extra: Seq[Column]) =
+      Dedup.tokenRows(df, col(text), "tok", col(id).as("doc_id") +: extra: _*)
     val vocab = toks(train, Seq(label.cast("int").as("_lab")))
       .groupBy(col("tok"))
       .agg(sum(col("_lab")).cast("long").as("_pos"),
@@ -777,7 +766,7 @@ object TextAnalysis {
       id: String = "doc_id", text: String = "text",
       kSmooth: Double = 0.1): DataFrame = {
     def bigrams(df: DataFrame, keep: Column => Seq[Column]) = {
-      val t = split(trim(lower(col(text))), "\\s+")
+      val t = Dedup.tokens(col(text))
       df.select(keep(col(id)) :+ explode(
           zip_with(slice(t, lit(1), greatest(size(t) - 1, lit(0))),
             slice(t, lit(2), greatest(size(t) - 1, lit(0))),
@@ -790,9 +779,7 @@ object TextAnalysis {
     val big = trainBg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
     val uni = big.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val vocab = train.select(explode(
-        split(trim(lower(col(text))), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
+    val vocab = Dedup.tokenRows(train, col(text), "w")
       .agg(count_distinct(col("w")).as("v"))
     val docBg = bigrams(score, c => Seq(c))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
@@ -833,8 +820,7 @@ object TextAnalysis {
       salt: String = "shard"): DataFrame = {
     val base = docs.select(col(id),
       tokenCount(col(text)).cast("long").as("n_tokens"),
-      conv(substring(md5(concat_ws(":", lit(salt),
-        col(id).cast("string"))), 1, 8), 16, 10).cast("long").as("ord"))
+      Sketches.saltedDraw(salt, col(id)).as("ord"))
     // rp is consumed TWICE (the per-partition sums and the final join);
     // localCheckpoint pins the RangePartitioner's sampled bounds once —
     // without it, correctness of the _pid-keyed offset join leans on
@@ -1034,11 +1020,11 @@ object TextAnalysis {
     * the target distribution; in practice documents are ranked or
     * gumbel-top-k'd by this weight.
     *
-    * Features are unigrams + bigrams hashed by the first 32 bits of
-    * md5 — the same engine-portable hash as [[hashSplit]], so an
-    * external engine reproduces the bucketing exactly. The log-ratio
-    * sum is double arithmetic rounded to 6 decimals (the [[Dedup]]/
-    * perplexity convention for float outputs).
+    * Features are unigrams + bigrams in [[Sketches.md5Bucket]] buckets
+    * (the first 32 bits of md5 — the same engine-portable hash as
+    * [[hashSplit]]), so an external engine reproduces the bucketing
+    * exactly. The log-ratio sum is double arithmetic rounded to 6
+    * decimals (the [[Dedup]]/perplexity convention for float outputs).
     *
     * Scale: one explode pass over the corpus; the two corpus models are
     * ONE map-side-combined aggregation to `nBuckets` rows (broadcast
@@ -1049,7 +1035,7 @@ object TextAnalysis {
   def dsirWeights(docs: DataFrame, isTarget: Column,
       id: String = "doc_id", text: String = "text",
       nBuckets: Int = 64): DataFrame = {
-    val toks = split(trim(lower(col(text))), "\\s+")
+    val toks = Dedup.tokens(col(text))
     val bigrams = zip_with(
       slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
       slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
@@ -1058,9 +1044,7 @@ object TextAnalysis {
       .select(col(id).as("doc_id"), isTarget.as("_tgt"),
         explode(concat(toks, bigrams)).as("_f"))
       .filter(length(col("_f")) > 0)
-      .withColumn("_b",
-        pmod(conv(substring(md5(col("_f")), 1, 8), 16, 10).cast("long"),
-          lit(nBuckets)))
+      .withColumn("_b", Sketches.md5Bucket(col("_f"), nBuckets))
     val counts = long.groupBy(col("_b")).agg(
       sum(when(col("_tgt"), 1L).otherwise(0L)).as("ct"),
       sum(when(col("_tgt"), 0L).otherwise(1L)).as("cr"))
@@ -1106,13 +1090,8 @@ object TextAnalysis {
     // (per-token double summation landed exactly on a rounding boundary
     // in testing; exact integers cannot).
     val w1000 = (b: Column) => pmod(b * 2654435761L, lit(1000))
-    val toks = split(trim(lower(col(text))), "\\s+")
-    val long = docs
-      .select(col(id).as("doc_id"), explode(toks).as("_t"))
-      .filter(length(col("_t")) > 0)
-      .withColumn("_b",
-        pmod(conv(substring(md5(col("_t")), 1, 8), 16, 10).cast("long"),
-          lit(nBuckets)))
+    val long = Dedup.tokenRows(docs, col(text), "_t", col(id).as("doc_id"))
+      .withColumn("_b", Sketches.md5Bucket(col("_t"), nBuckets))
     long
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
@@ -1124,6 +1103,13 @@ object TextAnalysis {
         round(lit(1.0) / (exp(-col("score")) + 1.0), 6).as("prob"),
         (lit(1.0) / (exp(-col("score")) + 1.0) >= threshold).as("keep"))
   }
+
+  /** The BPE word rows: [[Dedup.tokenRows]] as `word`, without words
+    * holding a literal bracket (the symbol delimiter). */
+  private def bpeWords(docs: DataFrame, text: String,
+      keep: Column*): DataFrame =
+    Dedup.tokenRows(docs, col(text), "word", keep: _*)
+      .filter(!col("word").contains("[") && !col("word").contains("]"))
 
   /** BPE merge training (Sennrich et al. 2016) — the tokenizer-training
     * step of an LLM data pipeline: `rounds` greedy rounds of (count all
@@ -1151,10 +1137,7 @@ object TextAnalysis {
       text: String = "text", rounds: Int = 5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(split(trim(lower(col(text))), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0 &&
-        !col("word").contains("[") && !col("word").contains("]"))
+    val words = bpeWords(docs, text)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
     var vocab = words
       .withColumn("seq", expr(
@@ -1211,11 +1194,7 @@ object TextAnalysis {
     val merges = bpeMerges(docs, id, text, rounds).collect()
       .map(r => (r.getString(1), r.getString(2)))
     val esc = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
-    val words = docs
-      .select(explode(split(trim(lower(col(text))), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0 &&
-        !col("word").contains("[") && !col("word").contains("]"))
-    val vocab0 = words.distinct()
+    val vocab0 = bpeWords(docs, text).distinct()
       .withColumn("seq", expr(
         """array_join(transform(sequence(1, length(word)),
            i -> concat('[', substring(word, i, 1), ']')), '')"""))
@@ -1225,11 +1204,7 @@ object TextAnalysis {
     }.select(col("word").as("enc_word"),
       size(split(expr("substring(seq, 2, length(seq) - 2)"), "\\]\\["))
         .as("n_sym"))
-    docs
-      .select(col(id).as("doc_id"),
-        explode(split(trim(lower(col(text))), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0 &&
-        !col("word").contains("[") && !col("word").contains("]"))
+    bpeWords(docs, text, col(id).as("doc_id"))
       .join(broadcast(encoded), col("word") === col("enc_word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -1317,7 +1292,7 @@ object TextAnalysis {
   def stupidBackoff(train: DataFrame, score: DataFrame,
       id: String = "doc_id", text: String = "text",
       alpha: Double = 0.4): DataFrame = {
-    val toks = split(trim(lower(col(text))), "\\s+")
+    val toks = Dedup.tokens(col(text))
     def tris(df: DataFrame, keep: Column => Seq[Column]): DataFrame = {
       val t = toks
       df.select(keep(col(id)) :+ explode(zip_with(
@@ -1349,8 +1324,7 @@ object TextAnalysis {
       col("cbg").as("c12"))
     val c23 = bigrams.select(col("wa").as("w2"), col("wb").as("w3"),
       col("cbg").as("c23_raw"))
-    val c2u = train.select(explode(toks).as("w"))
-      .filter(length(col("w")) > 0)
+    val c2u = Dedup.tokenRows(train, col(text), "w")
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
     val total = c2u.agg(sum(col("cw")).as("n_total"))
     val docTri = tris(score, c => Seq(c))
@@ -1397,8 +1371,7 @@ object TextAnalysis {
       n: Int = 3): DataFrame = {
     require(n >= 1, "n must be positive")
     def grams(df: DataFrame, keep: Seq[Column]): DataFrame = {
-      val t = filter(split(trim(lower(col(text))), "\\s+"),
-        w => length(w) > 0)
+      val t = Dedup.words(col(text))
       val g = when(size(t) >= n,
         transform(sequence(lit(1), size(t) - (n - 1)),
           i => array_join(slice(t, i, lit(n)), " ")))
@@ -1439,12 +1412,8 @@ object TextAnalysis {
     * rounded to 1e-6. */
   def jsdMatrix(docs: DataFrame, domain: Column, text: String = "text",
       nBuckets: Int = 256): DataFrame = {
-    val toks = split(trim(lower(col(text))), "\\s+")
-    val long = docs.select(domain.as("_d"), explode(toks).as("_f"))
-      .filter(length(col("_f")) > 0)
-      .withColumn("_b",
-        pmod(conv(substring(md5(col("_f")), 1, 8), 16, 10).cast("long"),
-          lit(nBuckets)))
+    val long = Dedup.tokenRows(docs, col(text), "_f", domain.as("_d"))
+      .withColumn("_b", Sketches.md5Bucket(col("_f"), nBuckets))
     val counts = long.groupBy(col("_d"), col("_b"))
       .agg(count(lit(1)).as("n"))
     val dense = counts.groupBy(col("_d")).agg(sum(col("n")).as("tot"))

@@ -74,12 +74,12 @@ object GraftFunctions {
   * disjuncts appears in exactly one branch), handling NULL semantics via
   * IsNull (NOT(NULL)=NULL would wrongly drop the row).
   *
-  * Disable with spark.graft.rewriteOrJoins=false. */
+  * Disable it like any optimizer rule, with
+  * spark.sql.optimizer.excludedRules=graft.plans.OrEqualityJoinRewrite. */
 object OrEqualityJoinRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.rewriteOrJoins", "true").toBoolean) plan
-    else plan.transformUp {
+    plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         val disjuncts = splitOr(cond)
         if (disjuncts.length >= 2 && disjuncts.length <= 8 &&

@@ -2174,7 +2174,17 @@ object BuildQueries {
     * pharmacy fills with form/dosage classification from the NDC dim,
     * procedure-billed naloxone with the J3490 modifier gate, union
     * distinct. Year floor scaled to the fixture's 1992-1998 epoch. */
-  def q144Naloxone(s: SparkSession, dir: String): DataFrame = {
+  def q144Naloxone(s: SparkSession, dir: String): DataFrame =
+    naloxoneBuild(s, dir, graft.builds.ClaimNaloxone.McaidInjCodes)
+      .orderBy(col("id_mcaid"), col("claim_header_id"), col("code"),
+        col("location"), col("event_date"))
+
+  /** The q144/q226 naloxone fixture through [[graft.builds.ClaimNaloxone]]
+    * with the given injection procedure codes: lineitem rows as
+    * pharmacy fills and procedure claims, the planted NDC and procedure
+    * dims. */
+  private def naloxoneBuild(s: SparkSession, dir: String,
+      injCodes: Seq[String]): DataFrame = {
     import s.implicits._
     val li = t(s, dir, "lineitem").join(
         t(s, dir, "orders").select(col("o_orderkey"),
@@ -2222,9 +2232,7 @@ object BuildQueries {
       ("J2312", "Injection naloxone 0.5mg"), ("J3490", "Unclassified drug"))
       .toDF("procedure_code", "procedure_long_desc")
     graft.builds.ClaimNaloxone.build(pharm, proc, ndcList, ndcCodes,
-        procDesc, minYear = 1996)
-      .orderBy(col("id_mcaid"), col("claim_header_id"), col("code"),
-        col("location"), col("event_date"))
+        procDesc, minYear = 1996, injCodes = injCodes)
   }
 
   /** mcare naloxone events (q226, load_stage.mcare_claim_naloxone.R):
@@ -2233,60 +2241,11 @@ object BuildQueries {
     * the SAME fixture (incl. planted J2312 rows) so the one semantic
     * difference is visible in the hash: mcare's procedure list drops
     * J2312. Output id aliased to id_mcare. */
-  def q226McareNaloxone(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = t(s, dir, "lineitem").join(
-        t(s, dir, "orders").select(col("o_orderkey"),
-          (col("o_custkey") % 70).as("id_mcaid")),
-        col("l_orderkey") === col("o_orderkey"))
-    val pk = col("l_partkey")
-    val pharm = li.select(col("id_mcaid"),
-      col("l_orderkey").as("claim_header_id"),
-      when(pk % 13 === 0, "00093216519").when(pk % 13 === 1, "55150034510")
-        .when(pk % 13 === 2, "55150032710")
-        .when(pk % 13 === 3, "00409121525")
-        .when(pk % 13 === 4, "012345678901")
-        .when(pk % 13 === 5, "12345678901")
-        .otherwise(lpad(pk.cast("string"), 11, "0")).as("ndc"),
-      to_date(col("l_shipdate")).as("rx_fill_date"),
-      when(pk % 7 === 0, 0.5).otherwise((lit(1) + pk % 5).cast("double"))
-        .as("rx_quantity"))
-    val proc = li.select(col("id_mcaid"),
-      col("l_orderkey").as("claim_header_id"),
-      when(pk % 9 === 0, "G1028").when(pk % 9 === 1, "G2215")
-        .when(pk % 9 === 2, "G2216").when(pk % 9 === 3, "J2310")
-        .when(pk % 9 === 4, "J2311").when(pk % 9 === 5, "J2312")
-        .when(pk % 9 === 6, "J3490")
-        .otherwise(lpad((pk % 88888).cast("string"), 5, "0"))
-        .as("procedure_code"),
-      when(col("l_suppkey") % 3 === 0, "HG")
-        .when(col("l_suppkey") % 3 === 1, "TG").otherwise("XX")
-        .as("modifier_code"),
-      to_date(col("l_shipdate")).as("last_service_date"))
-    val ndcList = Seq("00093216519", "55150034510", "55150032710",
-      "00409121525", "12345678901").toDF("ndc")
-    val ndcCodes = Seq(
-      ("00093216519", "Narcan Nasal", "NASAL SPRAY", 4.0, "mg/.1mL"),
-      ("55150034510", "Naloxone HCl", "SOLUTION FOR INJECTION", 1.0, "mg/mL"),
-      ("55150032710", "Naloxone HCl", "SOLUTION FOR INJECTION", 0.4, "mg/mL"),
-      ("00409121525", "Naloxone HCl", "INJECTION, SOLUTION", 0.4, "mg/mL"),
-      ("12345678901", "Generic Nalox", "SOLUTION", 2.0, "mg/.1mL"),
-      ("012345678901", "Wrapped Nalox", "SPRAY SOLUTION", 8.0, "oddunit"))
-      .toDF("ndc", "proprietaryname", "dosageformname",
-        "active_numerator_strength", "active_ingred_unit")
-    val procDesc = Seq(
-      ("G1028", "Naloxone nasal 8mg"), ("G2215", "Naloxone nasal 4mg"),
-      ("G2216", "Naloxone injection"), ("J2310", "Injection naloxone"),
-      ("J2311", "Injection naloxone 1mg"),
-      ("J2312", "Injection naloxone 0.5mg"), ("J3490", "Unclassified drug"))
-      .toDF("procedure_code", "procedure_long_desc")
-    graft.builds.ClaimNaloxone.build(pharm, proc, ndcList, ndcCodes,
-        procDesc, minYear = 1996,
-        injCodes = graft.builds.ClaimNaloxone.McareInjCodes)
+  def q226McareNaloxone(s: SparkSession, dir: String): DataFrame =
+    naloxoneBuild(s, dir, graft.builds.ClaimNaloxone.McareInjCodes)
       .withColumnRenamed("id_mcaid", "id_mcare")
       .orderBy(col("id_mcare"), col("claim_header_id"), col("code"),
         col("location"), col("event_date"))
-  }
 
   /** §2.9 AMR asthma-medication-ratio measure (q145,
     * load_stage.mcaid_perf_measure_amr.R): two measurement years so the

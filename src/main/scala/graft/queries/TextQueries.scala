@@ -458,8 +458,8 @@ object TextQueries {
     val docs = t(s, dir, "documents")
     val queries = docs.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").cast("string").as("query_id"),
-        array_join(slice(split(trim(lower(col("text"))), "\\s+"), 1, 5),
-          " ").as("query_text"))
+        array_join(slice(Dedup.tokens(col("text")), 1, 5), " ")
+          .as("query_text"))
     val positives = queries.select(col("query_id"),
       col("query_id").cast("long").as("pos_doc_id"))
     TextAnalysis.hardNegatives(docs, queries, positives, k = 10,
@@ -497,9 +497,7 @@ object TextQueries {
           .as("n_tokens"))
       .withColumn("stage",
         least(lit(15L), expr("n_tokens div 8")))
-      .withColumn("_draw",
-        conv(substring(md5(concat_ws(":", lit("curr"),
-          col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long"))
+      .withColumn("_draw", Sketches.saltedDraw("curr", col("doc_id")))
     graft.sources.BatchExport.rowNumbers(staged,
         Seq("stage", "_draw", "doc_id"), "order_idx")
       .select(col("doc_id"), col("n_tokens"), col("stage"),
@@ -667,8 +665,8 @@ object TextQueries {
     val docs = t(s, dir, "documents")
     val queries = docs.filter(col("doc_id") % 40 === 0)
       .select(col("doc_id").cast("string").as("query_id"),
-        array_join(slice(split(trim(lower(col("text"))), "\\s+"), 1, 4),
-          " ").as("query_text"))
+        array_join(slice(Dedup.tokens(col("text")), 1, 4), " ")
+          .as("query_text"))
     val ranked = TextAnalysis.bm25TopK(docs, queries, k = 10)
     val rel = ranked
       .filter(col("doc_id") === col("query_id").cast("long"))
@@ -885,7 +883,7 @@ object TextQueries {
     * top-50 by (pmi desc, pair) through the scale-safe TopN. Counts
     * are two Zipf-bounded aggregations; totals broadcast. */
   def q275PmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(Dedup.tokens(col("text")), w => length(w) > 0)
+    val toks = Dedup.words(col("text"))
     val docs = t(s, dir, "documents").select(toks.as("t"))
     val uni = docs.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))

@@ -149,6 +149,29 @@ class WordGramsSpec extends SparkSpec {
 
   // ---- specs --------------------------------------------------------------
 
+  test("tokens equals the regexp_replace-then-split formulation") {
+    val edges = Seq("", " ", "\t", "\ta", "a\t", "A\t\nB  c ", "x\u000By",
+      null)
+    val s = spark
+    import s.implicits._
+    val texts = spark.sparkContext
+      .parallelize(edges ++ rows.map(_._2), 3).toDF("text")
+    val text = col("text")
+    val replaced = split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
+    bothModes { mode =>
+      val got = texts.select(text, Dedup.tokens(text), replaced).collect()
+      assert(got.length == edges.length + rows.length)
+      got.foreach { r =>
+        assert(Option(r.getSeq[String](1)) == Option(r.getSeq[String](2)),
+          s"$mode: '${r.getString(0)}'")
+      }
+      assert(got.take(edges.length).map(r => Option(r.getSeq[String](1)))
+        .toSeq == Seq(Seq(""), Seq(""), Seq("", ""), Seq("", "a"),
+          Seq("a", ""), Seq("a", "b", "c"), Seq("x", "y")).map(Some(_)) :+
+          None, mode)
+    }
+  }
+
   test("wordGrams matches the lambda formulation and plain Scala") {
     bothModes { mode =>
       val got = docs.select(col("doc_id"), col("text"),

@@ -16,14 +16,16 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(!planStr.contains("BroadcastNestedLoopJoin"),
       "rewrite should eliminate the nested-loop join")
     val rewritten = withRewrite.collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.rewriteOrJoins", "false")
+    // Spark's own rule exclusion turns the injected rule off
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      OrEqualityJoinRewrite.ruleName)
     try {
       val baseline = J.q51ThetaOr(spark, sf).collect().map(_.toString).toSeq
       assert(rewritten == baseline, "rewrite changed join semantics")
       val basePlan = J.q51ThetaOr(spark, sf).queryExecution.executedPlan.toString
       assert(basePlan.contains("BroadcastNestedLoopJoin"),
         "baseline should be the nested-loop plan")
-    } finally spark.conf.set("spark.graft.rewriteOrJoins", "true")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("rewrite preserves rows matching multiple disjuncts exactly once") {
